@@ -972,7 +972,7 @@ def cdf_timestamp_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``table_changes_orders``, but the range endpoints arrive as
     TIMESTAMPS (Delta's ``table_changes('t', '<ts1>', '<ts2>')`` /
     ``startingTimestamp`` addressing) and resolve through the
-    per-write commit clock (catalog.py:_stamp_commit +
+    per-write commit clock (catalog.py:_invalidate +
     version_at_timestamp) — the addressing the r12 commit-time book
     made possible. The wall-clock instants are captured BETWEEN
     commits inside the query, so a clock that stamps the wrong write,
@@ -4738,8 +4738,11 @@ def embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
     except BaseException:
         # the caller never receives the frame, so the harness can't
-        # release the persisted cache — free it here (ADVICE r14)
+        # release the persisted cache — free it here (ADVICE r14);
+        # release() frees only adopted caches, and lsh is adopted only
+        # on success, so unpersist it directly as well
         release(lsh)
+        lsh.unpersist()
         raise
     return adopt(lsh, lsh)
 

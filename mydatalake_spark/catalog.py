@@ -225,6 +225,18 @@ def detect_partition_cols(path: str) -> list[str] | None:
     return cols or None
 
 
+def write_json(path: str, obj) -> None:
+    """Replace ``path`` with ``obj`` as JSON through a tmp file and a
+    rename, so a reader sees the old or the new content, never a torn
+    write. The one metadata writer for the table books, ANALYZE
+    statistics, the stored-view book and COPY INTO's file books."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh, indent=1, sort_keys=True)
+    os.replace(tmp, path)
+
+
 def split_name(full_name: str) -> tuple[str, str, str]:
     """``catalog.schema.table`` → parts; shorter names get defaults."""
     parts = full_name.split(".")
@@ -289,7 +301,7 @@ class Catalog:
     # partition-pruned diff able to PROVE leaves untouched.
     keep_versions: int = 0
     # Commit clock: () -> epoch seconds, stamped on every committed
-    # write (_stamp_commit). Default None = wall clock (time.time).
+    # write (_invalidate). Default None = wall clock (time.time).
     # Injectable so TIMESTAMP AS OF contracts can be exercised with a
     # deterministic strictly-increasing clock instead of real sleeps
     # between commits (r15 — removed the two 0.05 s sleeps from the
@@ -329,33 +341,65 @@ class Catalog:
             os.path.dirname(p), f".{os.path.basename(p)}__versions"
         )
 
-    def _last_commit_path(self, full_name: str) -> str:
-        return os.path.join(self._version_root(full_name), ".last_commit")
+    def _book_path(self, full_name: str) -> str:
+        return os.path.join(self._version_root(full_name), ".book.json")
 
-    def _commit_times_path(self, full_name: str) -> str:
-        return os.path.join(
-            self._version_root(full_name), ".commit_times.json"
-        )
+    def _book(self, full_name: str) -> dict:
+        """The table's metadata book (``{}`` before its first write):
 
-    def _stamp_commit(self, full_name: str) -> None:
-        """Record NOW as the live state's commit time.
+        - ``commit``: ``time`` (the live state's commit time), ``hwm``
+          (highest version number ever assigned), ``snapshots``
+          (``{label: commit time}`` of retained versions) and
+          ``append_txns`` (``{txn id: rows}``);
+        - ``definition``: what CREATE OR REPLACE discards — see
+          :meth:`definition`.
 
-        Called from :meth:`_invalidate` (every write path's final act)
-        so partitioned appends and leaf-directory swaps — which leave
-        the table ROOT directory's mtime untouched — still advance the
-        live commit clock. Root mtime alone let ``TIMESTAMP AS OF`` a
-        moment before such a write resolve to the LIVE (newer) state
-        (ADVICE r11)."""
-        import time as _time
+        It lives in the version root, so it moves with RENAME and
+        survives VACUUM; DROP removes it."""
+        p = self._book_path(full_name)
+        if not os.path.exists(p):
+            return {}
+        with open(p) as fh:
+            return json.load(fh)
 
-        root = self._version_root(full_name)
-        os.makedirs(root, exist_ok=True)
-        p = self._last_commit_path(full_name)
-        tmp = p + ".tmp"
-        now = self.clock() if self.clock is not None else _time.time()
-        with open(tmp, "w") as fh:
-            fh.write(repr(float(now)))
-        os.replace(tmp, p)
+    def _locked(self, full_name: str, lock_name: str):
+        """Exclusive ``flock`` on a lock file in the version root.
+        Released by the OS when the holder dies, so a crashed writer
+        never wedges the table. flock does not nest within a process:
+        a holder never takes the same lock again."""
+        import contextlib
+        import fcntl
+
+        @contextlib.contextmanager
+        def _lock():
+            root = self._version_root(full_name)
+            os.makedirs(root, exist_ok=True)
+            fd = os.open(
+                os.path.join(root, lock_name), os.O_RDWR | os.O_CREAT
+            )
+            try:
+                fcntl.flock(fd, fcntl.LOCK_EX)
+                yield
+            finally:
+                fcntl.flock(fd, fcntl.LOCK_UN)
+                os.close(fd)
+
+        return _lock()
+
+    def _update_book(self, full_name: str, edit) -> None:
+        """Read-modify-write the book under the book lock. ``edit``
+        changes the dict in place and must be a pure dict edit: it
+        runs under the lock, so it calls no catalog method. Empty
+        definition entries are dropped. Lock order: a caller inside
+        :meth:`_publish_lock` may take this lock, never the reverse."""
+        with self._locked(full_name, ".book.lock"):
+            book = self._book(full_name)
+            edit(book)
+            d = {k: v for k, v in book.get("definition", {}).items() if v}
+            book.pop("definition", None)
+            if d:
+                book["definition"] = d
+            write_json(self._book_path(full_name), book)
 
     def commit_token(self, full_name: str) -> str | None:
         """The live state's commit identity — Delta's "table version
@@ -371,30 +415,10 @@ class Catalog:
     def _publish_lock(self, full_name: str):
         """Advisory exclusive lock serializing the check-token-then-
         swap critical section of every publish — what turns the token
-        comparison into a real CAS. ``flock`` (not O_EXCL create):
-        released by the OS when the holder dies, so a crashed writer
-        never wedges the table. Single-filesystem scope, like the
+        comparison into a real CAS. Single-filesystem scope, like the
         rest of this catalog's storage layer; a multi-driver
         deployment puts its commit service here."""
-        import contextlib
-        import fcntl
-
-        @contextlib.contextmanager
-        def _lock():
-            root = self._version_root(full_name)
-            os.makedirs(root, exist_ok=True)
-            fd = os.open(
-                os.path.join(root, ".publish_lock"),
-                os.O_RDWR | os.O_CREAT,
-            )
-            try:
-                fcntl.flock(fd, fcntl.LOCK_EX)
-                yield
-            finally:
-                fcntl.flock(fd, fcntl.LOCK_UN)
-                os.close(fd)
-
-        return _lock()
+        return self._locked(full_name, ".publish_lock")
 
     def _check_expected(
         self, full_name: str, expected_token
@@ -410,14 +434,13 @@ class Catalog:
             )
 
     def _live_commit_time(self, full_name: str) -> float:
-        """When the live state was last committed: the explicit stamp
-        when present, else (tables last written before stamping, or by
-        an external writer) the MAX mtime over the whole tree — the
-        root dir alone misses partitioned appends and leaf swaps."""
-        p = self._last_commit_path(full_name)
-        if os.path.exists(p):
-            with open(p) as fh:
-                return float(fh.read().strip())
+        """When the live state was last committed: the book's stamp
+        when present, else (tables last written by an external writer)
+        the MAX mtime over the whole tree — the root dir alone misses
+        partitioned appends and leaf swaps."""
+        t = self._book(full_name).get("commit", {}).get("time")
+        if t is not None:
+            return float(t)
         path = self.path(full_name)
         mx = os.path.getmtime(path)
         for dp, _dirs, fs in os.walk(path):
@@ -428,33 +451,15 @@ class Catalog:
             )
         return mx
 
-    def _record_snapshot_time(
-        self, full_name: str, label: str, ts: float
-    ) -> None:
-        """Pin a retained snapshot's commit time (when the captured
-        state's bytes were committed) in the version root's book —
-        directory mtimes survive the snapshot rename but, like the
-        root mtime, never saw partitioned appends."""
-        p = self._commit_times_path(full_name)
-        book = {}
-        if os.path.exists(p):
-            with open(p) as fh:
-                book = json.load(fh)
-        book[label] = ts
-        live = set(self.versions(full_name))
-        book = {k: v for k, v in book.items() if k in live or k == label}
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(book, fh, indent=1, sort_keys=True)
-        os.replace(tmp, p)
-
     def _snapshot_commit_time(self, full_name: str, label: str) -> float:
-        p = self._commit_times_path(full_name)
-        if os.path.exists(p):
-            with open(p) as fh:
-                book = json.load(fh)
-            if label in book:
-                return book[label]
+        """A retained snapshot's commit time (when the captured state's
+        bytes were committed) from the book — directory mtimes survive
+        the snapshot rename but, like the root mtime, never saw
+        partitioned appends. The mtime is only the fallback for a
+        snapshot whose book update never landed."""
+        snaps = self._book(full_name).get("commit", {}).get("snapshots", {})
+        if label in snaps:
+            return snaps[label]
         return os.path.getmtime(
             os.path.join(self._version_root(full_name), label)
         )
@@ -860,71 +865,58 @@ class Catalog:
 
         High-water mark: version numbers are promised never-reused
         even after vacuum() retires every retained snapshot, so the
-        counter lives in a marker file, not the directory listing.
-        (drop()/truncate() remove the whole version root — a table
-        recreated from scratch legitimately restarts at v1.)"""
-        root = self._version_root(full_name)
+        counter lives in the book (``commit.hwm``), not the directory
+        listing. A snapshot directory whose book update never landed
+        still counts through the listing. (drop()/truncate() remove
+        the whole version root — a table recreated from scratch
+        legitimately restarts at v1.)"""
         existing = self.versions(full_name)
-        hwm_path = os.path.join(root, ".hwm")
-        hwm = 0
-        if os.path.exists(hwm_path):
-            with open(hwm_path) as fh:
-                raw = fh.read().strip()
-            try:
-                hwm = int(raw or 0)
-            except ValueError:
-                # A corrupted marker must not surface as a cryptic
-                # int() parse error blocking every overwrite (ADVICE
-                # r8): name the file and how to repair it. We do NOT
-                # silently fall back to max(existing labels) — after a
-                # vacuum that retired high-numbered snapshots that
-                # would reuse version numbers, the exact promise the
-                # marker exists to keep.
-                raise RuntimeError(
-                    f"{full_name}: version counter {hwm_path} is "
-                    f"corrupted (contents {raw!r}, expected an "
-                    "integer). Repair it by writing the highest "
-                    "version number ever assigned to this table (at "
-                    f"least {int(existing[-1][1:]) if existing else 0}"
-                    ", from the retained vNNNNNNNN labels), or delete "
-                    "the file to restart numbering if the table's "
-                    "history is being discarded."
-                ) from None
-        return 1 + max(hwm, int(existing[-1][1:]) if existing else 0)
+        top = int(existing[-1][1:]) if existing else 0
+        hwm = self._book(full_name).get("commit", {}).get("hwm", 0)
+        if type(hwm) is not int:
+            # A corrupted counter must not surface as a cryptic error
+            # blocking every overwrite (ADVICE r8): name the file and
+            # how to repair it. We do NOT silently fall back to
+            # max(existing labels) — after a vacuum that retired
+            # high-numbered snapshots that would reuse version
+            # numbers, the exact promise the counter exists to keep.
+            raise RuntimeError(
+                f"{full_name}: version counter commit.hwm in "
+                f"{self._book_path(full_name)} is corrupted (value "
+                f"{hwm!r}, expected an integer). Repair it by setting "
+                "it to the highest version number ever assigned to "
+                f"this table (at least {top}, from the retained "
+                "vNNNNNNNN labels), or remove the key to restart "
+                "numbering if the table's history is being discarded."
+            )
+        return 1 + max(hwm, top)
 
-    def _commit_version(self, full_name: str, nxt: int) -> None:
-        """Atomic marker update: a crash mid-write must not blank the
-        counter (an empty .hwm after a vacuum(keep=0) would let
-        numbering restart — the exact reuse the marker prevents).
-        Then prune beyond keep_versions."""
+    def _prune_versions(self, full_name: str) -> None:
+        """Retire retained snapshots beyond ``keep_versions``."""
         root = self._version_root(full_name)
-        hwm_path = os.path.join(root, ".hwm")
-        tmp = hwm_path + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(str(nxt))
-        os.replace(tmp, hwm_path)
         for stale in self.versions(full_name)[: -self.keep_versions]:
             shutil.rmtree(os.path.join(root, stale), ignore_errors=True)
 
-    def _snapshot_or_drop(self, full_name: str) -> None:
+    def _snapshot_or_drop(self, full_name: str) -> dict:
         """Move the current table dir aside as a snapshot (a rename,
         not a copy) and prune beyond ``keep_versions`` — or just drop
-        it when versioning is off."""
+        it when versioning is off. Returns ``{label: commit time}`` of
+        the state put aside (``{}`` when none) for the caller's book
+        update (:meth:`_invalidate`)."""
         final = self.path(full_name)
         if not os.path.isdir(final):
-            return
+            return {}
         if self.keep_versions <= 0:
             shutil.rmtree(final)
-            return
-        root = self._version_root(full_name)
-        os.makedirs(root, exist_ok=True)
+            return {}
         # the state being put aside was committed at the live clock's
         # current reading — capture BEFORE the rename consumes it
         ct = self._live_commit_time(full_name)
-        nxt = self._next_version(full_name)
-        os.replace(final, os.path.join(root, f"v{nxt:08d}"))
-        self._commit_version(full_name, nxt)
-        self._record_snapshot_time(full_name, f"v{nxt:08d}", ct)
+        label = f"v{self._next_version(full_name):08d}"
+        os.makedirs(self._version_root(full_name), exist_ok=True)
+        os.replace(final, os.path.join(self._version_root(full_name), label))
+        self._prune_versions(full_name)
+        return {label: ct}
 
     def snapshot(self, full_name: str, expected_token=False) -> int:
         """Checkpoint the LIVE table state as a new retained version
@@ -952,11 +944,16 @@ class Catalog:
         with self._publish_lock(full_name):
             if expected_token is not False:
                 self._check_expected(full_name, expected_token)
-            return self._snapshot_live(full_name)
+            snap = self._snapshot_live(full_name)
+            # the live state did not change: no commit stamp
+            self._invalidate(full_name, stamp=False, snapshots=snap)
+        return int(next(iter(snap))[1:])
 
-    def _snapshot_live(self, full_name: str) -> int:
-        """:meth:`snapshot`'s body, for callers already holding the
-        publish lock (flock does not nest within a process)."""
+    def _snapshot_live(self, full_name: str) -> dict:
+        """:meth:`snapshot`'s hardlink checkpoint, for callers already
+        holding the publish lock (flock does not nest within a
+        process). Returns ``{label: commit time}`` like
+        :meth:`_snapshot_or_drop`; the caller records it."""
         final = self.path(full_name)
         if not os.path.isdir(final):
             raise ValueError(f"cannot snapshot {full_name}: no live table")
@@ -968,14 +965,13 @@ class Catalog:
         root = self._version_root(full_name)
         os.makedirs(root, exist_ok=True)
         ct = self._live_commit_time(full_name)
-        nxt = self._next_version(full_name)
+        label = f"v{self._next_version(full_name):08d}"
         staging = os.path.join(root, ".snap_staging")
         shutil.rmtree(staging, ignore_errors=True)
         shutil.copytree(final, staging, copy_function=os.link)
-        os.replace(staging, os.path.join(root, f"v{nxt:08d}"))
-        self._commit_version(full_name, nxt)
-        self._record_snapshot_time(full_name, f"v{nxt:08d}", ct)
-        return nxt
+        os.replace(staging, os.path.join(root, label))
+        self._prune_versions(full_name)
+        return {label: ct}
 
     def overwrite(
         self,
@@ -1013,13 +1009,12 @@ class Catalog:
             df = self._apply_declared_clustering(
                 df, full_name, partition_by
             )
-        if self.fmt != "delta":
-            self._snapshot_or_drop(full_name)
+        snap = self._snapshot_or_drop(full_name) if self.fmt != "delta" else {}
         writer = df.write.format(self.fmt).mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.save(self.path(full_name))
-        self._invalidate(full_name)
+        self._invalidate(full_name, snapshots=snap)
         if self.declared_cluster_cols(full_name):
             # the whole table now carries the declared layout (the
             # clustering hook or a _preclustered caller produced it):
@@ -1136,38 +1131,15 @@ class Catalog:
             except ConcurrentWriteException:
                 shutil.rmtree(staging, ignore_errors=True)
                 raise
-            self._snapshot_or_drop(full_name)
+            snap = self._snapshot_or_drop(full_name)
             os.replace(staging, final)
-            self._invalidate(full_name)
+            self._invalidate(full_name, snapshots=snap)
         if self.declared_cluster_cols(full_name):
             self._mark_clustered_current(full_name)
 
-    def _append_txn_path(self, full_name: str) -> str:
-        return os.path.join(
-            self._version_root(full_name), ".append_txns.json"
-        )
-
     def _append_txn_seen(self, full_name: str, txn_id: str) -> bool:
-        p = self._append_txn_path(full_name)
-        if not os.path.exists(p):
-            return False
-        with open(p) as fh:
-            return txn_id in json.load(fh)
-
-    def _record_append_txn(
-        self, full_name: str, txn_id: str, n: int
-    ) -> None:
-        p = self._append_txn_path(full_name)
-        book = {}
-        if os.path.exists(p):
-            with open(p) as fh:
-                book = json.load(fh)
-        book[txn_id] = n
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(book, fh, indent=1, sort_keys=True)
-        os.replace(tmp, p)
+        txns = self._book(full_name).get("commit", {}).get("append_txns", {})
+        return txn_id in txns
 
     def _cleanup_append_txn(self, full_name: str, txn_id: str) -> None:
         """Remove data files a CRASHED attempt of this txn left in the
@@ -1239,9 +1211,9 @@ class Catalog:
         analogue, and the table-layer sibling of the views layer's
         ``batch_token``), the append is EXACTLY-ONCE under replay:
 
-        - a token already recorded in ``.append_txns.json`` (version
-          root, committed only after every file move landed) → no-op
-          returning 0;
+        - a token already recorded in the book's ``commit`` section
+          (recorded in the commit's one book update, after every file
+          move landed) → no-op returning 0;
         - a crashed attempt's partial files are recognizable (each
           moved file is name-prefixed ``txn-{id}-``) and removed
           before the retry re-moves the full staged batch — the
@@ -1295,9 +1267,10 @@ class Catalog:
                 # path (layout detection now succeeds, so the
                 # declared-empty branch is unreachable on replay)
                 n = self.read(full_name).count()
+                # record BEFORE removing the proof: a crash in between
+                # leaves a recorded token, never a lost one
+                self._invalidate(full_name, txn=(txn_id, n))
                 os.remove(marker)
-                self._record_append_txn(full_name, txn_id, n)
-                self._invalidate(full_name)
                 return n
             self._cleanup_append_txn(full_name, txn_id)
         if expected_token is _AUTO_TOKEN:
@@ -1336,7 +1309,7 @@ class Catalog:
             )
             if n == 0:
                 shutil.rmtree(staging, ignore_errors=True)
-                self._record_append_txn(full_name, txn_id, 0)
+                self._invalidate(full_name, txn=(txn_id, 0))
                 return 0
             for dirpath, _dirs, files in os.walk(staging):
                 for f in files:
@@ -1354,8 +1327,7 @@ class Catalog:
                     shutil.rmtree(staging, ignore_errors=True)
                     raise
                 os.replace(staging, base)
-                self._invalidate(full_name)
-            self._record_append_txn(full_name, txn_id, n)
+                self._invalidate(full_name, txn=(txn_id, n))
             return n
         live = self.read(full_name)
         # a feed may omit declared GENERATED columns — compute them
@@ -1425,12 +1397,14 @@ class Catalog:
                 )
                 n = self.read(full_name).count()  # footer metadata
                 if txn_id is not None:
+                    self._invalidate(
+                        full_name, stamp=False, txn=(txn_id, n)
+                    )
                     marker = os.path.join(
                         self.path(full_name), f".txn-{txn_id}-create"
                     )
                     if os.path.exists(marker):
                         os.remove(marker)
-                    self._record_append_txn(full_name, txn_id, n)
                 return n
             # declared-partitioned but rows already live UNPARTITIONED
             # (e.g. an explicit partition_by=None first write): leaf
@@ -1488,8 +1462,11 @@ class Catalog:
             except ConcurrentWriteException:
                 shutil.rmtree(staging, ignore_errors=True)
                 raise
-            if self.keep_versions > 0:
+            snap = (
                 self._snapshot_live(full_name)
+                if self.keep_versions > 0
+                else {}
+            )
             for dirpath, _dirs, files in os.walk(staging):
                 for f in files:
                     if f.startswith((".", "_")):
@@ -1504,9 +1481,11 @@ class Catalog:
                     os.makedirs(os.path.dirname(dst), exist_ok=True)
                     os.replace(src, dst)
             shutil.rmtree(staging, ignore_errors=True)
-            self._invalidate(full_name)
-        if txn_id is not None:
-            self._record_append_txn(full_name, txn_id, n)
+            self._invalidate(
+                full_name,
+                snapshots=snap,
+                txn=None if txn_id is None else (txn_id, n),
+            )
         return n
 
     def read_marker(self, full_name: str, filename: str) -> str | None:
@@ -1518,10 +1497,48 @@ class Catalog:
         with open(p) as fh:
             return fh.read()
 
+    # --- table definition (the book's ``definition`` section) --------
+
+    def definition(self, full_name: str) -> dict:
+        """The table's declared definition — what CREATE OR REPLACE
+        discards and CLONE copies: ``constraints`` ``{name: expr}``,
+        ``generated`` ``{col: expr}``, ``identity`` ``{col: spec}``,
+        ``comment``, ``columns`` (column comments), ``tblproperties``,
+        ``partition_by`` / ``cluster_by`` (declared layout) and
+        ``mview`` (a materialized view's SQL). Absent entries are
+        unset. A fresh dict on every call: edit it freely."""
+        return self._book(full_name).get("definition", {})
+
+    def update_definition(self, full_name: str, **entries) -> None:
+        """Set definition entries in one book update; an empty or None
+        value removes the entry."""
+        self._edit_definition(full_name, lambda d: d.update(entries))
+
+    def clear_definition(self, full_name: str) -> None:
+        """Drop the whole definition (CREATE OR REPLACE: constraints,
+        generated/identity declarations, comments, properties, layout
+        and a view definition attach to the definition being
+        replaced, not to the name). The commit section — history, the
+        version counter, txn ids — stays. The clustered-file book
+        certified the old keys' layout, so it goes too."""
+        self._update_book(full_name, lambda b: b.pop("definition", None))
+        p = self._clustered_files_path(full_name)
+        if os.path.exists(p):
+            os.remove(p)
+
+    def _edit_definition(self, full_name: str, edit) -> None:
+        """:meth:`_update_book` on the definition section: ``edit``
+        changes the section dict in place (same purity rule), so a
+        read-modify-write of one entry cannot lose a concurrent edit
+        of another."""
+        self._update_book(
+            full_name, lambda b: edit(b.setdefault("definition", {}))
+        )
+
     # --- table-level CHECK constraints -------------------------------
     # Delta ``ALTER TABLE ... ADD CONSTRAINT name CHECK (expr)``
-    # analogue: constraints are TABLE metadata (they live beside the
-    # version counter, survive every overwrite, are dropped with the
+    # analogue: constraints are TABLE metadata (they live in the
+    # table's book, survive every overwrite, are dropped with the
     # table, and are copied by CLONE — Delta's constraint-propagation
     # rule) and are enforced on EVERY catalog write path as an
     # in-plan per-row guard (_with_check_guards): no second
@@ -1530,18 +1547,9 @@ class Catalog:
     # semantics: a row violates only when the expression is FALSE —
     # NULL satisfies (ANSI, and Delta's behavior).
 
-    def _constraints_path(self, full_name: str) -> str:
-        return os.path.join(
-            self._version_root(full_name), ".constraints.json"
-        )
-
     def constraints(self, full_name: str) -> dict:
         """Active CHECK constraints: ``{name: sql_expr}``."""
-        p = self._constraints_path(full_name)
-        if not os.path.exists(p):
-            return {}
-        with open(p) as fh:
-            return json.load(fh)
+        return self.definition(full_name).get("constraints", {})
 
     def add_constraint(self, full_name: str, name: str, expr: str) -> None:
         """Add a named CHECK constraint to an existing table.
@@ -1566,8 +1574,10 @@ class Catalog:
                 f"(CHECK ({cons[name]})); drop_constraint it first"
             )
         self._validate_constraint(full_name, name, expr)
-        cons[name] = expr
-        self._write_constraints(full_name, cons)
+        self._edit_definition(
+            full_name,
+            lambda d: d.setdefault("constraints", {}).update({name: expr}),
+        )
 
     def _validate_constraint(
         self, full_name: str, name: str, expr: str
@@ -1587,14 +1597,6 @@ class Catalog:
                 "first (Delta ADD CONSTRAINT fails the same way)"
             )
 
-    def _write_constraints(self, full_name: str, cons: dict) -> None:
-        root = self._version_root(full_name)
-        os.makedirs(root, exist_ok=True)
-        tmp = self._constraints_path(full_name) + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(cons, fh, indent=1)
-        os.replace(tmp, self._constraints_path(full_name))
-
     def drop_constraint(self, full_name: str, name: str) -> None:
         cons = self.constraints(full_name)
         if name not in cons:
@@ -1602,8 +1604,10 @@ class Catalog:
                 f"no constraint {name!r} on {full_name} "
                 f"(have: {sorted(cons) or 'none'})"
             )
-        del cons[name]
-        self._write_constraints(full_name, cons)
+        self._edit_definition(
+            full_name,
+            lambda d: d.setdefault("constraints", {}).pop(name, None),
+        )
 
     def sync_constraints(self, full_name: str, desired: dict) -> dict:
         """Reconcile the table's constraint set to a DECLARED desired
@@ -1614,10 +1618,10 @@ class Catalog:
         table is removed by the next run, by design), missing ones are
         added, changed expressions are re-validated against current
         data. Validation happens BEFORE anything is written and the
-        new set lands in ONE atomic file replace, so a rejected or
+        new set lands in ONE atomic book update, so a rejected or
         crashed sync leaves the previous constraints fully in force —
         never a window where a changed constraint is simply gone.
-        No-ops (the common steady state) only read the metadata file.
+        No-ops (the common steady state) only read the book.
         Returns ``{"added": [...], "dropped": [...], "changed":
         [...]}``."""
         current = self.constraints(full_name)
@@ -1631,46 +1635,29 @@ class Catalog:
             return {"added": [], "dropped": [], "changed": []}
         for name in (*added, *changed):
             self._validate_constraint(full_name, name, desired[name])
-        self._write_constraints(full_name, desired)
+        self.update_definition(full_name, constraints=desired)
         return {"added": added, "dropped": dropped, "changed": changed}
 
     # --- generated columns (Delta GENERATED ALWAYS AS analogue) ------
-
-    def _tabledef_path(self, full_name: str) -> str:
-        return os.path.join(
-            self._version_root(full_name), ".tabledef.json"
-        )
-
-    def _tabledef(self, full_name: str) -> dict:
-        p = self._tabledef_path(full_name)
-        if not os.path.exists(p):
-            return {}
-        with open(p) as fh:
-            return json.load(fh)
-
-    def _write_tabledef(self, full_name: str, book: dict) -> None:
-        self._write_book(self._tabledef_path(full_name), book)
 
     def declared_partition_cols(self, full_name: str) -> list[str] | None:
         """Partition columns DECLARED by column-list DDL (``CREATE
         TABLE t (...) PARTITIONED BY (p)``) before any data exists.
         An empty table has no hive leaf directories to detect a
-        layout from, so the declaration waits in the version root
-        until the first write lays out the tree."""
-        return self._tabledef(full_name).get("partition_by") or None
+        layout from, so the declaration waits in the book until the
+        first write lays out the tree."""
+        return self.definition(full_name).get("partition_by") or None
 
     def set_declared_partition_cols(
         self, full_name: str, pcols: list[str]
     ) -> None:
-        book = self._tabledef(full_name)
-        if pcols and book.get("cluster_by"):
+        cby = self.declared_cluster_cols(full_name)
+        if pcols and cby:
             raise ValueError(
-                f"{full_name} declares CLUSTER BY "
-                f"{book['cluster_by']} — a table is either "
-                "partitioned or clustered, not both"
+                f"{full_name} declares CLUSTER BY {cby} — a table is "
+                "either partitioned or clustered, not both"
             )
-        book["partition_by"] = list(pcols)
-        self._write_tabledef(full_name, book)
+        self.update_definition(full_name, partition_by=list(pcols))
 
     def declared_cluster_cols(self, full_name: str) -> list[str] | None:
         """Clustering columns DECLARED by ``CREATE TABLE ... CLUSTER
@@ -1681,7 +1668,7 @@ class Catalog:
         ~(n-1)/n of the files); appends land unclustered and
         ``OPTIMIZE t`` restores the layout — exactly Delta's
         write-then-OPTIMIZE contract."""
-        return self._tabledef(full_name).get("cluster_by") or None
+        return self.definition(full_name).get("cluster_by") or None
 
     def set_declared_cluster_cols(
         self, full_name: str, cols: list[str] | None,
@@ -1694,9 +1681,9 @@ class Catalog:
         old-layout check (ADVICE r13): a CREATE OR REPLACE defines the
         NEW layout, so the still-live old data's hive directories must
         not veto the declaration."""
-        book = self._tabledef(full_name)
+        cols = list(cols) if cols else None
         if cols:
-            pby = book.get("partition_by") or (
+            pby = self.declared_partition_cols(full_name) or (
                 None
                 if replacing
                 else detect_partition_cols(self.path(full_name))
@@ -1706,12 +1693,7 @@ class Catalog:
                     f"{full_name} is partitioned by {pby} — a table "
                     "is either partitioned or clustered, not both"
                 )
-            book["cluster_by"] = list(cols)
-        else:
-            book.pop("cluster_by", None)
-        if (book.get("cluster_by") or None) != (
-            self._tabledef(full_name).get("cluster_by") or None
-        ):
+        if cols != self.declared_cluster_cols(full_name):
             # the clustered-file book certifies the PREVIOUS keys'
             # layout — a changed declaration invalidates it, else a
             # multi-column OPTIMIZE would see every old-layout file
@@ -1720,7 +1702,7 @@ class Catalog:
             p = self._clustered_files_path(full_name)
             if os.path.exists(p):
                 os.remove(p)
-        self._write_tabledef(full_name, book)
+        self.update_definition(full_name, cluster_by=cols)
 
     def _clustered_files_path(self, full_name: str) -> str:
         return os.path.join(
@@ -1751,10 +1733,7 @@ class Catalog:
             os.path.basename(p)
             for p in data_files(self.path(full_name))
         ]
-        self._write_book(
-            self._clustered_files_path(full_name),
-            {"files": names} if names else {},
-        )
+        write_json(self._clustered_files_path(full_name), {"files": names})
 
     def _apply_declared_clustering(
         self, df: DataFrame, full_name: str,
@@ -1800,18 +1779,9 @@ class Catalog:
 
         return _zorder_frame(df, cby, 16, None, curve="hilbert")
 
-    def _generated_path(self, full_name: str) -> str:
-        return os.path.join(
-            self._version_root(full_name), ".generated.json"
-        )
-
     def generated_columns(self, full_name: str) -> dict:
         """Active generated-column declarations: ``{col: sql_expr}``."""
-        p = self._generated_path(full_name)
-        if not os.path.exists(p):
-            return {}
-        with open(p) as fh:
-            return json.load(fh)
+        return self.definition(full_name).get("generated", {})
 
     def set_generated_column(
         self, full_name: str, column: str, expr: str
@@ -1866,13 +1836,10 @@ class Catalog:
                 full_name,
                 partition_by=pcols,
             )
-        gens = self.generated_columns(full_name)
-        gens[column] = expr
-        os.makedirs(self._version_root(full_name), exist_ok=True)
-        tmp = self._generated_path(full_name) + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(gens, fh, indent=1, sort_keys=True)
-        os.replace(tmp, self._generated_path(full_name))
+        self._edit_definition(
+            full_name,
+            lambda d: d.setdefault("generated", {}).update({column: expr}),
+        )
 
     def drop_generated_column(self, full_name: str, column: str) -> None:
         """Remove a generated-column DECLARATION (the physical column
@@ -1883,67 +1850,30 @@ class Catalog:
                 f"no generated column {column!r} on {full_name} "
                 f"(declared: {sorted(gens)})"
             )
-        del gens[column]
-        tmp = self._generated_path(full_name) + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(gens, fh, indent=1, sort_keys=True)
-        os.replace(tmp, self._generated_path(full_name))
+        self._edit_definition(
+            full_name,
+            lambda d: d.setdefault("generated", {}).pop(column, None),
+        )
 
     # --- comments + table properties (COMMENT ON / TBLPROPERTIES) ----
 
-    def _properties_path(self, full_name: str) -> str:
-        return os.path.join(
-            self._version_root(full_name), ".properties.json"
-        )
-
-    def _properties(self, full_name: str) -> dict:
-        p = self._properties_path(full_name)
-        if not os.path.exists(p):
-            return {}
-        with open(p) as fh:
-            return json.load(fh)
-
-    def _write_book(self, path: str, book: dict) -> None:
-        """Atomic metadata-book writer shared by the version-root
-        books (.properties.json, .tabledef.json): empty sections
-        drop, an all-empty book deletes the file, writes go through
-        tmp + rename."""
-        book = {k: v for k, v in book.items() if v}
-        if not book:
-            if os.path.exists(path):
-                os.remove(path)
-            return
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(book, fh, indent=1, sort_keys=True)
-        os.replace(tmp, path)
-
-    def _write_properties(self, full_name: str, book: dict) -> None:
-        self._write_book(self._properties_path(full_name), book)
-
     def table_comment(self, full_name: str) -> str | None:
-        return self._properties(full_name).get("comment")
+        return self.definition(full_name).get("comment")
 
     def set_table_comment(
         self, full_name: str, text: str | None
     ) -> None:
         """COMMENT ON TABLE t IS 'text' (NULL clears). Metadata-only:
-        lives in the version root (moves with RENAME, copied by CLONE,
+        lives in the definition (moves with RENAME, copied by CLONE,
         dropped by CREATE OR REPLACE) — never a data rewrite."""
         if not self.exists(full_name):
             raise ValueError(
                 f"COMMENT ON TABLE: {full_name} does not exist"
             )
-        book = self._properties(full_name)
-        if text is None:
-            book.pop("comment", None)
-        else:
-            book["comment"] = text
-        self._write_properties(full_name, book)
+        self.update_definition(full_name, comment=text)
 
     def column_comments(self, full_name: str) -> dict:
-        return dict(self._properties(full_name).get("columns", {}))
+        return self.definition(full_name).get("columns", {})
 
     def set_column_comment(
         self, full_name: str, column: str, text: str | None
@@ -1958,17 +1888,18 @@ class Catalog:
                 f"COMMENT ON COLUMN: {column!r} not in {full_name} "
                 f"({cols})"
             )
-        book = self._properties(full_name)
-        cc = book.get("columns", {})
-        if text is None:
-            cc.pop(column, None)
-        else:
-            cc[column] = text
-        book["columns"] = cc
-        self._write_properties(full_name, book)
+
+        def edit(d):
+            cc = d.setdefault("columns", {})
+            if text is None:
+                cc.pop(column, None)
+            else:
+                cc[column] = text
+
+        self._edit_definition(full_name, edit)
 
     def table_properties(self, full_name: str) -> dict:
-        return dict(self._properties(full_name).get("tblproperties", {}))
+        return self.definition(full_name).get("tblproperties", {})
 
     def set_table_properties(
         self, full_name: str, props: dict
@@ -1980,11 +1911,11 @@ class Catalog:
             raise ValueError(
                 f"SET TBLPROPERTIES: {full_name} does not exist"
             )
-        book = self._properties(full_name)
-        tp = book.get("tblproperties", {})
-        tp.update({str(k): str(v) for k, v in props.items()})
-        book["tblproperties"] = tp
-        self._write_properties(full_name, book)
+        props = {str(k): str(v) for k, v in props.items()}
+        self._edit_definition(
+            full_name,
+            lambda d: d.setdefault("tblproperties", {}).update(props),
+        )
 
     def unset_table_properties(
         self, full_name: str, keys: list[str], if_exists: bool = False
@@ -1993,8 +1924,7 @@ class Catalog:
             raise ValueError(
                 f"UNSET TBLPROPERTIES: {full_name} does not exist"
             )
-        book = self._properties(full_name)
-        tp = book.get("tblproperties", {})
+        tp = self.table_properties(full_name)
         missing = [k for k in keys if k not in tp]
         if missing and not if_exists:
             raise ValueError(
@@ -2002,31 +1932,25 @@ class Catalog:
                 f"{full_name} (have {sorted(tp)}) — use IF EXISTS to "
                 "ignore"
             )
-        for k in keys:
-            tp.pop(k, None)
-        book["tblproperties"] = tp
-        self._write_properties(full_name, book)
+
+        def edit(d):
+            tp = d.setdefault("tblproperties", {})
+            for k in keys:
+                tp.pop(k, None)
+
+        self._edit_definition(full_name, edit)
 
     # --- identity columns (GENERATED ALWAYS AS IDENTITY) -------------
-
-    def _identity_path(self, full_name: str) -> str:
-        return os.path.join(
-            self._version_root(full_name), ".identity.json"
-        )
 
     def identity_columns(self, full_name: str) -> dict:
         """Active identity declarations: ``{col: {"start", "step",
         "high", "type"}}`` — ``high`` is the last value ever allocated
-        (None before the first allocation). The book lives in the
-        version root beside the txn/commit books, so RESTORE rolls the
-        DATA back but never the counter: restored-then-new inserts
-        cannot reuse ids (Delta's identity high-water lives in the
-        log's table metadata with the same property)."""
-        p = self._identity_path(full_name)
-        if not os.path.exists(p):
-            return {}
-        with open(p) as fh:
-            return json.load(fh)
+        (None before the first allocation). It lives in the table's
+        book beside the commit section, so RESTORE rolls the DATA back
+        but never the counter: restored-then-new inserts cannot reuse
+        ids (Delta's identity high-water lives in the log's table
+        metadata with the same property)."""
+        return self.definition(full_name).get("identity", {})
 
     def set_identity_column(
         self,
@@ -2085,14 +2009,16 @@ class Catalog:
             # both the declared start and every existing value
             edge = start - step
             high = max(edge, seed) if step > 0 else min(edge, seed)
-        book = self.identity_columns(full_name)
-        book[column] = {
+        spec = {
             "start": int(start),
             "step": int(step),
             "high": high if high is None else int(high),
             "type": dtype,
         }
-        self._write_identity_book(full_name, book)
+        self._edit_definition(
+            full_name,
+            lambda d: d.setdefault("identity", {}).update({column: spec}),
+        )
 
     def drop_identity_column(self, full_name: str, column: str) -> None:
         """Remove an identity DECLARATION (the physical column stays)."""
@@ -2102,15 +2028,24 @@ class Catalog:
                 f"no identity column {column!r} on {full_name} "
                 f"(declared: {sorted(book)})"
             )
-        del book[column]
-        self._write_identity_book(full_name, book)
+        self._edit_definition(
+            full_name, lambda d: d.setdefault("identity", {}).pop(column, None)
+        )
 
-    def _write_identity_book(self, full_name: str, book: dict) -> None:
-        os.makedirs(self._version_root(full_name), exist_ok=True)
-        tmp = self._identity_path(full_name) + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(book, fh, indent=1, sort_keys=True)
-        os.replace(tmp, self._identity_path(full_name))
+    def _reserve_identity(
+        self, full_name: str, column: str, spec: dict, high: int
+    ) -> dict:
+        """Move ``column``'s identity high-water to ``high`` in one
+        book update (a sibling column's concurrent update is kept);
+        returns the updated spec."""
+        spec = {**spec, "high": int(high)}
+
+        def edit(d):
+            cur = d.setdefault("identity", {}).setdefault(column, spec)
+            cur["high"] = spec["high"]
+
+        self._edit_definition(full_name, edit)
+        return spec
 
     def _allocate_identity(
         self, df: DataFrame, full_name: str, column: str, spec: dict
@@ -2163,12 +2098,9 @@ class Catalog:
                 # allocation can never mint one of them again.
                 # Values at-or-below the book are the normal staged-
                 # union CDC pattern (previously allocated) — no-op.
-                book = self.identity_columns(full_name)
-                cur = book.get(column, spec)
-                cur["high"] = int(carried)
-                book[column] = cur
-                self._write_identity_book(full_name, book)
-                spec = cur
+                spec = self._reserve_identity(
+                    full_name, column, spec, carried
+                )
             if probe["n_null"] == 0:
                 return df
         base = spec["high"]
@@ -2242,13 +2174,8 @@ class Catalog:
                 "exhausted (every write burns one slot per row; "
                 "declare BIGINT for surrogate keys)"
             )
-        # reserve BEFORE the write lands — re-read the book so a
-        # sibling column's concurrent update is not clobbered
-        book = self.identity_columns(full_name)
-        cur = book.get(column, spec)
-        cur["high"] = int(end)
-        book[column] = cur
-        self._write_identity_book(full_name, book)
+        # reserve BEFORE the write lands
+        self._reserve_identity(full_name, column, spec, end)
         return out
 
     def _with_generated(self, df: DataFrame, full_name: str) -> DataFrame:
@@ -2468,7 +2395,7 @@ class Catalog:
         staging = final + "__staging"
         shutil.rmtree(staging, ignore_errors=True)
         shutil.copytree(src, staging, copy_function=os.link)
-        self._snapshot_or_drop(full_name)
+        snap = self._snapshot_or_drop(full_name)
         os.replace(staging, final)
         if label not in self.versions(full_name):
             # retention pruning retired the source while snapshotting
@@ -2479,8 +2406,8 @@ class Catalog:
             repinned = os.path.join(self._version_root(full_name), label)
             shutil.copytree(final, repinned, copy_function=os.link)
             os.utime(repinned, (src_stat.st_atime, src_stat.st_mtime))
-            self._record_snapshot_time(full_name, label, src_commit_time)
-        self._invalidate(full_name)
+            snap[label] = src_commit_time
+        self._invalidate(full_name, snapshots=snap)
 
     def clone(
         self,
@@ -2548,35 +2475,24 @@ class Catalog:
         copy_fn = os.link if shallow else shutil.copy2
         shutil.copytree(src, staging, copy_function=copy_fn)
         os.replace(staging, dst)
-        # a clone carries the source's CHECK constraints and
-        # generated-column declarations (Delta clone copies table
-        # metadata) — but never its history (above)
-        for src_meta, dst_meta in (
-            (self._constraints_path(src_name),
-             self._constraints_path(dst_name)),
-            (self._generated_path(src_name),
-             self._generated_path(dst_name)),
-            # identity declaration travels WITH its high-water: ids
-            # minted on the clone continue past the source's counter
-            # at clone time (Delta CLONE carries identity metadata)
-            (self._identity_path(src_name),
-             self._identity_path(dst_name)),
-            # comments + TBLPROPERTIES (Delta CLONE copies them)
-            (self._properties_path(src_name),
-             self._properties_path(dst_name)),
-            # declared-but-not-yet-laid-out partitioning (r12): a
-            # clone of an anchor-empty DDL table keeps the promise
-            # that its first write lays out the declared tree
-            (self._tabledef_path(src_name),
-             self._tabledef_path(dst_name)),
-            # liquid-clustering file book: clone copies the tree with
-            # identical file names, so the marks stay valid
-            (self._clustered_files_path(src_name),
-             self._clustered_files_path(dst_name)),
-        ):
-            if os.path.exists(src_meta):
-                os.makedirs(self._version_root(dst_name), exist_ok=True)
-                shutil.copy2(src_meta, dst_meta)
+        # a clone carries the source's definition (Delta clone copies
+        # table metadata: constraints, generated columns, identity
+        # WITH its high-water so ids minted on the clone continue past
+        # the source's counter, comments, TBLPROPERTIES, declared
+        # layout) — but never its history (above), and not a view
+        # definition: a clone is a table
+        definition = self.definition(src_name)
+        definition.pop("mview", None)
+        self._update_book(
+            dst_name, lambda b: b.update(definition=definition)
+        )
+        # liquid-clustering file book: clone copies the tree with
+        # identical file names, so the marks stay valid
+        if os.path.exists(self._clustered_files_path(src_name)):
+            shutil.copy2(
+                self._clustered_files_path(src_name),
+                self._clustered_files_path(dst_name),
+            )
         self._invalidate(dst_name)
 
     def vacuum(
@@ -2651,27 +2567,6 @@ class Catalog:
             freed += _weigh(p)
             if not dry_run:
                 shutil.rmtree(p, ignore_errors=True)
-        if not dry_run and not self.versions(full_name):
-            # The version root is removed ONLY when nothing durable
-            # remains in it. Every book there records a promise that
-            # must outlive a vacuum — .hwm (version numbers never
-            # reused), .identity.json (ids never reused),
-            # .constraints.json / .generated.json / .tabledef.json /
-            # .properties.json (declarations), the commit clock, the
-            # append/copy-into txn books. Vacuuming old SNAPSHOTS must
-            # never strip the live table's declarations —
-            # drop()/truncate() end the lifecycle and do remove them.
-            root = self._version_root(full_name)
-            transient = {".snap_staging"}
-            leftovers = [
-                e
-                for e in (
-                    os.listdir(root) if os.path.isdir(root) else []
-                )
-                if e not in transient and not e.endswith(".tmp")
-            ]
-            if not leftovers:
-                shutil.rmtree(root, ignore_errors=True)
         import time
 
         staging_dirs = [
@@ -2778,12 +2673,7 @@ class Catalog:
                 for r in rows
             },
         }
-        root = self._version_root(full_name)
-        os.makedirs(root, exist_ok=True)
-        tmp = self._stats_path(full_name) + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(stats, fh, indent=1)
-        os.replace(tmp, self._stats_path(full_name))
+        write_json(self._stats_path(full_name), stats)
         return stats
 
     def table_stats(
@@ -2840,28 +2730,63 @@ class Catalog:
             ),
         }
 
-    def _invalidate(self, full_name: str, stamp: bool = True) -> None:
+    def _invalidate(
+        self,
+        full_name: str,
+        stamp: bool = True,
+        snapshots: dict | None = None,
+        txn: tuple[str, int] | None = None,
+    ) -> None:
         """Drop cached file listings for a rewritten path — Spark's
         shared FileStatusCache otherwise serves stale part-file lists
-        to later scans of the same location. Every write path ends
-        here, so this is also where the live commit clock advances
-        (:meth:`_stamp_commit`) — including the partitioned appends
-        and leaf swaps that never touch the root dir mtime.
+        to later scans of the same location — then record the commit.
+        Every write path ends here after its data swap, so this is its
+        ONE book update, carrying together: the live commit time
+        (stamped here — including the partitioned appends and leaf
+        swaps that never touch the root dir mtime, ADVICE r11), the
+        ``{label: commit time}`` snapshots it put aside (which also
+        raise the version high-water) and its append ``txn`` as
+        ``(id, rows)``. A crash before this update leaves the data
+        swapped and the snapshot directory in place: reads see the new
+        rows and :meth:`_next_version` numbers past the directory.
 
-        ``stamp=False`` is for metadata-only operations (RENAME) that
-        change WHERE the bytes live but not WHEN they were committed:
-        stamping there would overwrite the ``.last_commit`` that just
-        moved with the version root, so ``TIMESTAMP AS OF`` an instant
-        between the last data write and the rename would resolve to an
-        older retained snapshot instead of the live state (ADVICE r12)."""
+        ``stamp=False`` is for operations that change WHERE the bytes
+        live but not WHEN they were committed (RENAME, snapshot()):
+        stamping there would move the commit time that just moved with
+        the version root, so ``TIMESTAMP AS OF`` an instant between the
+        last data write and the rename would resolve to an older
+        retained snapshot instead of the live state (ADVICE r12)."""
+        import time
+
         self.spark.catalog.refreshByPath(self.path(full_name))
-        if stamp and os.path.isdir(self.path(full_name)):
-            self._stamp_commit(full_name)
+        stamp = stamp and os.path.isdir(self.path(full_name))
+        if not (stamp or snapshots or txn):
+            return
+        if stamp:
+            now = self.clock() if self.clock is not None else time.time()
+        live = set(self.versions(full_name)) if snapshots else set()
+
+        def edit(book):
+            c = book.setdefault("commit", {})
+            if stamp:
+                c["time"] = float(now)
+            if snapshots:
+                c["hwm"] = max(
+                    [c.get("hwm", 0)] + [int(k[1:]) for k in snapshots]
+                )
+                merged = {**c.get("snapshots", {}), **snapshots}
+                c["snapshots"] = {
+                    k: v for k, v in merged.items() if k in live
+                }
+            if txn:
+                c.setdefault("append_txns", {})[txn[0]] = txn[1]
+
+        self._update_book(full_name, edit)
 
     def rename_table(self, src_name: str, dst_name: str) -> None:
         """ALTER TABLE ... RENAME TO: two directory renames (data dir
-        + version root, which carries history, constraints, generated
-        declarations, txn books — everything definition-scoped), so
+        + version root, which carries history and the table's book —
+        everything definition-scoped), so
         the operation is metadata-speed at any size. Refuses an
         occupied destination (table or stored view). Lazy views that
         referenced the old name keep their SQL text and simply fail to
@@ -2888,9 +2813,9 @@ class Catalog:
                 self._version_root(dst_name),
             )
         self._invalidate(src_name)
-        # Metadata-only: the commit clock (.last_commit) moved with the
-        # version root and still names the last DATA write — do not
-        # overwrite it with the rename time (ADVICE r12).
+        # Metadata-only: the commit time moved with the book and still
+        # names the last DATA write — do not overwrite it with the
+        # rename time (ADVICE r12).
         self._invalidate(dst_name, stamp=False)
 
     def drop(self, full_name: str) -> None:
@@ -2968,11 +2893,7 @@ class Catalog:
                 "CREATE OR REPLACE VIEW to redefine it"
             )
         book[full_name] = sql
-        os.makedirs(self.warehouse, exist_ok=True)
-        tmp = self._views_book_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(book, fh, indent=1, sort_keys=True)
-        os.replace(tmp, self._views_book_path())
+        write_json(self._views_book_path(), book)
 
     def drop_stored_view(self, full_name: str) -> None:
         book = self.stored_views()
@@ -2981,10 +2902,7 @@ class Catalog:
                 f"DROP VIEW: {full_name} is not a stored view"
             )
         del book[full_name]
-        tmp = self._views_book_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(book, fh, indent=1, sort_keys=True)
-        os.replace(tmp, self._views_book_path())
+        write_json(self._views_book_path(), book)
 
     def register_referenced(self, sql: str) -> dict[str, str]:
         """:meth:`register_all` restricted to dotted names the

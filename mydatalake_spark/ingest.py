@@ -452,7 +452,6 @@ def copy_into(
         }
     )
     vroot = catalog._version_root(full_name)
-    os.makedirs(vroot, exist_ok=True)
     book_path = os.path.join(vroot, ".copy_into.json")
     pending_path = os.path.join(vroot, ".copy_into.pending.json")
     book = {}
@@ -460,7 +459,7 @@ def copy_into(
         with open(book_path) as fh:
             book = _json.load(fh)
 
-    from .catalog import detect_partition_cols
+    from .catalog import detect_partition_cols, write_json
 
     def _apply_batch(stamp: dict, txn: str) -> int:
         """Append one pinned (file set, txn) batch exactly once, then
@@ -499,10 +498,7 @@ def copy_into(
                 df, full_name, partition_by=pcols, txn_id=txn
             )
         book.update(stamp)
-        tmp = book_path + ".tmp"
-        with open(tmp, "w") as fh:
-            _json.dump(book, fh, indent=1, sort_keys=True)
-        os.replace(tmp, book_path)
+        write_json(book_path, book)
         if os.path.exists(pending_path):
             os.remove(pending_path)
         return n
@@ -563,8 +559,5 @@ def copy_into(
         "\n".join(os.path.abspath(p) for p in new).encode()
     ).hexdigest()[:16]
     stamp = {os.path.abspath(p): [os.path.getsize(p)] for p in new}
-    tmp = pending_path + ".tmp"
-    with open(tmp, "w") as fh:
-        _json.dump({"txn": txn, "files": stamp}, fh, indent=1)
-    os.replace(tmp, pending_path)
+    write_json(pending_path, {"txn": txn, "files": stamp})
     return loaded + _apply_batch(stamp, txn)

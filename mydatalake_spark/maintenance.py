@@ -582,9 +582,9 @@ def _commit_recluster(
         except ConcurrentWriteException:
             shutil.rmtree(staging, ignore_errors=True)
             raise
-        catalog._snapshot_or_drop(full_name)
+        snap = catalog._snapshot_or_drop(full_name)
         os.replace(staging, path)
-        catalog._invalidate(full_name)
+        catalog._invalidate(full_name, snapshots=snap)
     catalog._mark_clustered_current(full_name)
     return written
 

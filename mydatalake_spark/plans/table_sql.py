@@ -714,8 +714,8 @@ def _create_table_columns(catalog, s, toks, table, after, name_end, replace):
     and the first INSERT see the declared types); generated columns
     are declared through the same set_generated_column path every
     write then enforces. PARTITIONED BY is recorded as a DECLARATION
-    (``.tabledef.json`` — an empty partitioned parquet directory has
-    no hive leaves to detect): the empty table is written flat with
+    in the table's definition (an empty partitioned parquet directory
+    has no hive leaves to detect): the empty table is written flat with
     one schema-anchor file, and the FIRST data write replaces the
     directory with the declared partitioned layout
     (``Catalog.append``'s declared-empty branch)."""
@@ -864,7 +864,7 @@ def _create_table_columns(catalog, s, toks, table, after, name_end, replace):
                 f"CREATE TABLE: {table} already exists — use CREATE OR "
                 "REPLACE TABLE to redefine it"
             )
-        _clear_definition_metadata(catalog, table)
+        catalog.clear_definition(table)
     ddl = ", ".join(f"{n} {t}" for n, t in fields)
     try:
         empty = catalog.spark.createDataFrame([], ddl)
@@ -925,37 +925,6 @@ def _refuse_stored_view(catalog, table: str, verb: str) -> None:
         )
 
 
-def _clear_definition_metadata(catalog, full_name: str) -> None:
-    """CREATE OR REPLACE semantics: CHECK constraints, generated-column
-    declarations, and a materialized-view definition attach to the
-    table DEFINITION being replaced, not to the name — Delta's REPLACE
-    drops them with the old schema. Version history stays (REPLACE is
-    a versioned overwrite, like Delta's)."""
-    for p in (
-        catalog._constraints_path(full_name),
-        catalog._generated_path(full_name),
-        catalog._identity_path(full_name),
-        catalog._properties_path(full_name),
-        catalog._tabledef_path(full_name),
-        catalog._clustered_files_path(full_name),
-        _mview_path(catalog, full_name),
-    ):
-        if os.path.exists(p):
-            os.remove(p)
-
-
-def _mview_path(catalog, full_name: str) -> str:
-    """Sidecar holding a materialized view's declared definition —
-    beside the constraints/txn books in the version root, so DROP
-    removes it with the table and CLONE does not carry it (a clone is
-    a table; re-declare the view if the clone should stay live)."""
-    import os
-
-    return os.path.join(
-        catalog._version_root(full_name), ".mview.json"
-    )
-
-
 def _create_materialized_view(catalog, s, toks, idx, replace):
     """CREATE [OR REPLACE] MATERIALIZED VIEW v [PARTITIONED BY (..)]
     AS SELECT ... — the reference's literal gold statement
@@ -964,9 +933,6 @@ def _create_materialized_view(catalog, s, toks, idx, replace):
     is recomputed into a stored table, and the definition persists so
     REFRESH MATERIALIZED VIEW recomputes it later. Plain CREATE VIEW
     is refused by name — every view here is materialized."""
-    import json as _json
-    import os
-
     if toks[idx][0] == "VIEW":
         # plain (lazy) view: the definition is STORED, not the data —
         # every read re-resolves against the live base tables
@@ -1018,7 +984,7 @@ def _create_materialized_view(catalog, s, toks, idx, replace):
                 f"CREATE MATERIALIZED VIEW: {name} already exists — "
                 "use CREATE OR REPLACE MATERIALIZED VIEW to redefine it"
             )
-        _clear_definition_metadata(catalog, name)
+        catalog.clear_definition(name)
     from ..views import MaterializedView
 
     body = s[toks[after + 1][1]:]
@@ -1027,12 +993,12 @@ def _create_materialized_view(catalog, s, toks, idx, replace):
         partition_by=pby or [],
     )
     mv.refresh()
-    meta_p = _mview_path(catalog, name)
-    os.makedirs(os.path.dirname(meta_p), exist_ok=True)
-    tmp = meta_p + ".tmp"
-    with open(tmp, "w") as fh:
-        _json.dump({"sql": body, "partition_by": pby or []}, fh, indent=1)
-    os.replace(tmp, meta_p)
+    # the view's SQL lives in the table's definition, so DROP
+    # removes it with the table and CLONE does not carry it (a clone
+    # is a table; re-declare the view if the clone should stay live)
+    catalog.update_definition(
+        name, mview={"sql": body, "partition_by": pby or []}
+    )
     return None
 
 
@@ -1040,18 +1006,13 @@ def load_materialized_view(catalog, full_name: str):
     """Rebuild the views.py MaterializedView object for a table
     declared via CREATE MATERIALIZED VIEW; raises by name when the
     table carries no view definition."""
-    import json as _json
-    import os
-
-    p = _mview_path(catalog, full_name)
-    if not os.path.exists(p):
+    meta = catalog.definition(full_name).get("mview")
+    if not meta:
         raise ValueError(
             f"{full_name} is not a materialized view (no stored "
             "definition — was it created with CREATE MATERIALIZED "
             "VIEW?)"
         )
-    with open(p) as fh:
-        meta = _json.load(fh)
     from ..views import MaterializedView
 
     return MaterializedView(
@@ -1231,7 +1192,7 @@ def run_table_sql(catalog, sql: str, max_partitions: int = 10_000):
                 f"DROP {kind}: {table} does not exist (use DROP "
                 f"{kind} IF EXISTS to tolerate absence)"
             )
-        if is_mview and not os.path.exists(_mview_path(catalog, table)):
+        if is_mview and "mview" not in catalog.definition(table):
             raise ValueError(
                 f"DROP MATERIALIZED VIEW: {table} is a plain table, "
                 "not a materialized view — use DROP TABLE"
@@ -1318,8 +1279,6 @@ def run_table_sql(catalog, sql: str, max_partitions: int = 10_000):
                 rows or [], "key string, value string"
             )
         if [t[0] for t in toks[1:3]] == ["CREATE", "TABLE"]:
-            import json as _json
-
             table, after = _table_name(s, toks, 3)
             if after != len(toks):
                 raise UnsupportedStatement(
@@ -1335,10 +1294,8 @@ def run_table_sql(catalog, sql: str, max_partitions: int = 10_000):
                 raise ValueError(
                     f"SHOW CREATE TABLE: {table} does not exist"
                 )
-            mv_p = _mview_path(catalog, table)
-            if os.path.exists(mv_p):
-                with open(mv_p) as fh:
-                    meta = _json.load(fh)
+            meta = catalog.definition(table).get("mview")
+            if meta:
                 pby_mv = meta.get("partition_by") or []
                 stmt = (
                     f"CREATE MATERIALIZED VIEW {table}"
@@ -1430,7 +1387,7 @@ def run_table_sql(catalog, sql: str, max_partitions: int = 10_000):
                 (name, "VIEW") for name in sorted(catalog.stored_views())
             ]
             for t_name in catalog.list_tables():
-                if os.path.exists(_mview_path(catalog, t_name)):
+                if "mview" in catalog.definition(t_name):
                     rows.append((t_name, "MATERIALIZED VIEW"))
             return catalog.spark.createDataFrame(
                 rows, "viewName string, viewType string"
@@ -1531,12 +1488,17 @@ def run_table_sql(catalog, sql: str, max_partitions: int = 10_000):
                     table, col,
                     start=ispec["start"], step=ispec["step"],
                 )
-            book = catalog._properties(src)
-            if book:
-                # one batched book write (table comment + column
-                # comments + TBLPROPERTIES together) — the clone()
-                # discipline, not N schema-validating setter calls
-                catalog._write_properties(table, book)
+            # one book update (table comment + column comments +
+            # TBLPROPERTIES together), not N schema-validating setter
+            # calls
+            src_def = catalog.definition(src)
+            catalog.update_definition(
+                table,
+                **{
+                    k: src_def.get(k)
+                    for k in ("comment", "columns", "tblproperties")
+                },
+            )
             return None
         if nxt[:1] == ["CLONE"] or (
             len(nxt) == 2
@@ -1597,7 +1559,7 @@ def run_table_sql(catalog, sql: str, max_partitions: int = 10_000):
                     "CREATE OR REPLACE TABLE for a versioned overwrite"
                 )
             prev_cby = catalog.declared_cluster_cols(table)
-            _clear_definition_metadata(catalog, table)
+            catalog.clear_definition(table)
         from .qualify import run_sql
 
         select_sql = s[toks[after + 1][1]:]
@@ -1628,7 +1590,7 @@ def run_table_sql(catalog, sql: str, max_partitions: int = 10_000):
             catalog.overwrite_via_staging(rows, table, partition_by=pby)
         except BaseException:
             # a failed CTAS must not leave the pre-write declaration
-            # behind: on a fresh name a stale .tabledef.json would
+            # behind: on a fresh name a stale declaration would
             # wedge later CREATEs, and on a failed OR REPLACE the
             # SURVIVING old table keeps ITS declaration (restored, not
             # cleared — ADVICE r13), never the replacement's
@@ -2110,7 +2072,7 @@ def run_table_sql(catalog, sql: str, max_partitions: int = 10_000):
                         ("Table Properties",
                          _json.dumps(props, sort_keys=True), None)
                     )
-                if os.path.exists(_mview_path(catalog, table)):
+                if "mview" in catalog.definition(table):
                     rows.append(
                         ("Type", "MATERIALIZED VIEW",
                          "REFRESH MATERIALIZED VIEW recomputes")
@@ -2772,7 +2734,7 @@ def run_table_sql(catalog, sql: str, max_partitions: int = 10_000):
                 _rewrite(df.drop(*cols))
             except BaseException:
                 if any(c in ident_book for c in cols):
-                    catalog._write_identity_book(table, ident_book)
+                    catalog.update_definition(table, identity=ident_book)
                 for c in cols:
                     if c in gen_book:
                         catalog.set_generated_column(
@@ -2781,16 +2743,14 @@ def run_table_sql(catalog, sql: str, max_partitions: int = 10_000):
                 raise
             # a dropped column's comment dies with it — a ghost entry
             # would silently attach to a future same-named column.
-            # Edited through the book directly: the public
+            # Edited through the definition directly: the public
             # set_column_comment validates against the LIVE schema,
             # which no longer has this column.
-            book = catalog._properties(table)
-            cc = book.get("columns", {})
+            cc = catalog.column_comments(table)
             if any(c in cc for c in cols):
                 for c in cols:
                     cc.pop(c, None)
-                book["columns"] = cc
-                catalog._write_properties(table, book)
+                catalog.update_definition(table, columns=cc)
             return None
 
         if verbs == ["RENAME", "TO"]:
@@ -2846,14 +2806,12 @@ def run_table_sql(catalog, sql: str, max_partitions: int = 10_000):
             # the comment book is keyed by name: carry it to the new
             # name (a stale old-name entry would vanish from DESCRIBE
             # and later resurrect on an unrelated same-named column).
-            # Book-level edit — the old name is gone from the live
-            # schema the public setter validates against.
-            book = catalog._properties(table)
-            cc = book.get("columns", {})
+            # Definition-level edit — the old name is gone from the
+            # live schema the public setter validates against.
+            cc = catalog.column_comments(table)
             if old in cc:
                 cc[new] = cc.pop(old)
-                book["columns"] = cc
-                catalog._write_properties(table, book)
+                catalog.update_definition(table, columns=cc)
             return None
 
         raise UnsupportedStatement(

@@ -274,9 +274,9 @@ def test_append_txn_crashed_attempt_converges(spark, tmp_path):
     )
     assert cat.append(batch, t, txn_id="b7") == 2
     # forge the crash: erase the token record but leave the files
-    book_path = cat._append_txn_path(t)
+    book_path = cat._book_path(t)
     book = json.load(open(book_path))
-    del book["b7"]
+    del book["commit"]["append_txns"]["b7"]
     json.dump(book, open(book_path, "w"))
     # replay: the two txn-b7-* files are cleaned up and re-moved
     assert cat.append(batch, t, txn_id="b7") == 2
@@ -304,8 +304,10 @@ def test_append_txn_first_batch_crash_retakes_create_path(spark, tmp_path):
     t = "bronze.ev.first"
     batch = spark.createDataFrame([(1, "a")], "id int, v string")
     assert cat.append(batch, t, txn_id="t0") == 1
-    book_path = cat._append_txn_path(t)
-    json.dump({}, open(book_path, "w"))  # crash: token lost
+    book_path = cat._book_path(t)
+    book = json.load(open(book_path))
+    book["commit"]["append_txns"] = {}
+    json.dump(book, open(book_path, "w"))  # crash: token lost
     assert cat.append(batch, t, txn_id="t0") == 1
     assert cat.read(t).count() == 1
     assert cat.append(batch, t, txn_id="t0") == 0  # now recorded
@@ -396,8 +398,12 @@ def test_declared_empty_first_append_txn_crash_replay(spark, tmp_path):
     # forge the crash: swap landed (marker present) but token missing
     with open(os.path.join(cat.path(T), ".txn-batch1-create"), "w") as fh:
         fh.write("batch1")
-    book = cat._append_txn_path(T)
-    os.remove(book)
+    import json
+
+    book_path = cat._book_path(T)
+    book = json.load(open(book_path))
+    del book["commit"]["append_txns"]
+    json.dump(book, open(book_path, "w"))
     assert cat.append(df, T, txn_id="batch1") == 2  # recognized, no dup
     assert cat.read(T).count() == 2
     assert not os.path.exists(os.path.join(cat.path(T), ".txn-batch1-create"))

@@ -518,21 +518,26 @@ def test_vacuum_contract(spark, tmp_path):
 
 
 def test_corrupted_hwm_marker_raises_actionable_error(spark, tmp_path):
-    """ADVICE r8: a non-numeric .hwm must surface as a clear error
-    naming the marker file and the repair, not an int() ValueError."""
-    import os
+    """ADVICE r8: a non-numeric version counter must surface as a
+    clear error naming the book file and the repair, not an int()
+    ValueError."""
+    import json
 
     cat = Catalog(spark, str(tmp_path / "wh"), keep_versions=3)
     cat.overwrite_via_staging(_kv_batch(spark, "a"), "g.s.t")
     cat.overwrite_via_staging(_kv_batch(spark, "b"), "g.s.t")
-    hwm = os.path.join(cat._version_root("g.s.t"), ".hwm")
-    with open(hwm, "w") as fh:
-        fh.write("garbage\n")
+    path = cat._book_path("g.s.t")
+    with open(path) as fh:
+        book = json.load(fh)
+    book["commit"]["hwm"] = "garbage\n"
+    with open(path, "w") as fh:
+        json.dump(book, fh)
     with pytest.raises(RuntimeError, match=r"\.hwm.*corrupted|corrupted"):
         cat.overwrite_via_staging(_kv_batch(spark, "c"), "g.s.t")
     # repair per the error message: write the highest assigned number
-    with open(hwm, "w") as fh:
-        fh.write("1")
+    book["commit"]["hwm"] = 1
+    with open(path, "w") as fh:
+        json.dump(book, fh)
     cat.overwrite_via_staging(_kv_batch(spark, "c"), "g.s.t")
     assert cat.read("g.s.t").first().v == "c"
 

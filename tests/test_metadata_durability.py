@@ -420,3 +420,102 @@ def test_copy_into_abandon_sweeps_partial_files(spark, tmp_path):
     )
     assert got == [(0, "seed"), (1, "a"), (2, "b")], got
     assert loaded == 2
+
+
+def test_concurrent_property_writes_and_commits_lose_no_update(
+    spark, tmp_path
+):
+    # one book per table holds both the commit record and the
+    # definition: every read-modify-write of it must serialize, or a
+    # commit's update and a TBLPROPERTIES edit racing it overwrite
+    # each other's keys
+    import sys
+    import threading
+
+    cat = Catalog(spark, str(tmp_path / "wh"), keep_versions=10)
+    df = spark.createDataFrame([(1, "a")], "id int, v string")
+    cat.overwrite(df, TBL)
+    commits = 3
+    start = threading.Barrier(5)
+    errors = []
+
+    def props(w):
+        try:
+            start.wait()
+            for i in range(25):
+                cat.set_table_properties(TBL, {f"w{w}_k{i}": str(i)})
+        except BaseException as e:  # noqa: BLE001 — asserted below
+            errors.append(e)
+
+    def overwrites():
+        try:
+            start.wait()
+            for i in range(commits):
+                cat.overwrite_via_staging(
+                    df.withColumn("v", F.lit(f"c{i}")), TBL
+                )
+        except BaseException as e:  # noqa: BLE001 — asserted below
+            errors.append(e)
+
+    threads = [threading.Thread(target=props, args=(w,)) for w in range(4)]
+    threads.append(threading.Thread(target=overwrites))
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    tp = cat.table_properties(TBL)
+    assert len(tp) == 100
+    assert all(f"w{w}_k{i}" in tp for w in range(4) for i in range(25))
+    assert len(cat.versions(TBL)) == commits
+    assert cat._book(TBL)["commit"]["hwm"] == commits
+    assert cat.read(TBL).first().v == f"c{commits - 1}"
+
+
+def test_one_commit_writes_one_book_update(spark, tmp_path, monkeypatch):
+    cat = Catalog(spark, str(tmp_path / "wh"), keep_versions=2)
+
+    def batch(v):
+        return spark.createDataFrame([(1, v)], "id int, v string")
+
+    cat.overwrite_via_staging(batch("a"), TBL)
+    cat.overwrite_via_staging(batch("b"), TBL)
+    root = cat._version_root(TBL)
+
+    def listing():
+        return {
+            e: (os.stat(os.path.join(root, e)).st_ino,
+                os.stat(os.path.join(root, e)).st_mtime_ns)
+            for e in os.listdir(root)
+        }
+
+    before = listing()
+    cat.overwrite_via_staging(batch("c"), TBL)
+    after = listing()
+    touched = {e for e in after if before.get(e) != after[e]}
+    assert touched == {"v00000002", ".book.json"}
+    assert set(before) - set(after) == set()
+    # a crash between the data swap and the book update: the swap
+    # stands, and the orphaned snapshot still holds its number
+    real_update = cat._update_book
+
+    def crash(*_a, **_k):
+        raise OSError("crash before the book update")
+
+    monkeypatch.setattr(cat, "_update_book", crash)
+    with pytest.raises(OSError, match="crash"):
+        cat.overwrite_via_staging(batch("d"), TBL)
+    monkeypatch.setattr(cat, "_update_book", real_update)
+    assert cat.read(TBL).first().v == "d"
+    assert cat.versions(TBL) == ["v00000002", "v00000003"]
+    assert cat._book(TBL)["commit"]["hwm"] == 2
+    cat.overwrite_via_staging(batch("e"), TBL)
+    assert cat.versions(TBL) == ["v00000003", "v00000004"]
+    assert cat.read_version(TBL, version=3).first().v == "c"
+    assert cat.read(TBL).first().v == "e"

@@ -1332,11 +1332,12 @@ def test_vacuum_retain_hours(spark, tmp_path):
     run_table_sql(cat, f"UPDATE {TBL} SET amount = 3 WHERE id = 1")
     assert len(cat.versions(TBL)) == 3
     # backdate the first two snapshots' COMMIT times by 48h in the book
-    p = cat._commit_times_path(TBL)
+    p = cat._book_path(TBL)
     with open(p) as fh:
         book = json.load(fh)
-    for label in sorted(book)[:2]:
-        book[label] -= 48 * 3600
+    snaps = book["commit"]["snapshots"]
+    for label in sorted(snaps)[:2]:
+        snaps[label] -= 48 * 3600
     with open(p, "w") as fh:
         json.dump(book, fh)
     # dry run reports, deletes nothing

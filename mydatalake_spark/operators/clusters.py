@@ -14,9 +14,14 @@ expressed in DataFrames — per iteration one join edges⋈labels and one
 min-aggregate, both hash-shuffles on node id. Iterations needed =
 component diameter, and near-dup clusters are shallow (pairs come
 from a similarity threshold, so components are dense — diameter 2-4
-in practice). Each iteration's result is persisted and the previous
-unpersisted, so lineage stays O(1) instead of growing per iteration
-(the classic iterative-Spark pitfall).
+in practice). The edge list is read once: one generator pass emits
+every edge in both directions, so an unmaterialized upstream (the
+shingle self-join of the near-dup pipeline) is evaluated once, not
+once per direction. Each iteration's result is checkpointed and the
+previous released, so lineage stays O(1) instead of growing per
+iteration (the classic iterative-Spark pitfall), and the convergence
+probe reads only the checkpointed round: it carries the round's input
+label beside the new one, so no join against the old labels is needed.
 """
 
 from __future__ import annotations
@@ -60,15 +65,18 @@ def connected_components(
     ``_cc_iterations`` attribute (bench/scaling evidence reads it).
     """
     sym = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
-    ).unionByName(
-        edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
+        F.inline(
+            F.array(
+                F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),
+                F.struct(F.col(dst).alias("u"), F.col(src).alias("v")),
+            )
+        )
     ).distinct().persist()
 
+    # filled by the first round's eager checkpoint
     labels = sym.groupBy("u").agg(
         F.least(F.min("v"), F.col("u")).alias("component")
     ).persist()
-    labels.count()
 
     for it in range(1, max_iters + 1):
         # new label = min(own, min over neighbors' labels)
@@ -93,7 +101,8 @@ def connected_components(
         neighbor_min = pulled.groupBy("u").agg(
             F.min("nbr_label").alias("nbr_min")
         )
-        # persisted: feeds BOTH sides of the pointer-jump self-join
+        # persisted: feeds BOTH sides of the pointer-jump self-join.
+        # `_prev` keeps the round's input label for the convergence probe.
         merged = (
             labels.join(neighbor_min, "u", "left")
             .select(
@@ -102,6 +111,7 @@ def connected_components(
                     F.col("component"),
                     F.coalesce(F.col("nbr_min"), F.col("component")),
                 ).alias("component"),
+                F.col("component").alias("_prev"),
             )
             .persist()
         )
@@ -124,16 +134,15 @@ def connected_components(
                     F.col("component"),
                     F.coalesce(F.col("_parent"), F.col("component")),
                 ).alias("component"),
+                "_prev",
             )
             .localCheckpoint(eager=True)
         )
-        # LIMIT-1 probe: proving convergence still scans everything,
-        # but a NOT-converged round stops at the first changed label
-        # instead of counting them all.
+        # LIMIT-1 probe over the checkpointed round alone (no join, no
+        # shuffle): proving convergence still scans every row, but a
+        # NOT-converged round stops at the first changed label.
         changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "u")
-            .filter(F.col("n.component") != F.col("o.component"))
+            new_labels.filter(F.col("component") != F.col("_prev"))
             .limit(1)
             .count()
         )

@@ -55,3 +55,18 @@ def pytest_configure(config):
         "markers",
         "scaling: two-point scaling-curve gate (slow; needs sf0.1 testdata)",
     )
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    # The default `-m "not scaling"` (pytest.ini) drops the scaling gate
+    # silently; say so, and how to run it.
+    n = sum(
+        1
+        for item in terminalreporter.stats.get("deselected", [])
+        if item.get_closest_marker("scaling") is not None
+    )
+    if n:
+        terminalreporter.write_line(
+            f"{n} scaling test(s) deselected; run them with: "
+            "python -m pytest tests/ -m scaling"
+        )

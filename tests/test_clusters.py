@@ -1,6 +1,7 @@
 """Connected components / duplicate-cluster resolution."""
 
 import pytest
+from pyspark.sql import functions as F
 
 from mydatalake_spark.operators.clusters import (
     connected_components,
@@ -81,3 +82,26 @@ def test_cc_reports_iteration_count(spark):
     out = connected_components(edges)
     out.collect()
     assert isinstance(out._cc_iterations, int) and out._cc_iterations >= 1
+    assert out.columns == ["node", "component"]
+
+
+def test_cc_reads_each_edge_row_once(spark):
+    """The symmetric edge set is built in one pass over ``edges``: an
+    unmaterialized upstream plan (the near-dup pipeline's shingle
+    self-join) must be evaluated once per edge row, not once per
+    direction."""
+    pairs = [(1, 2), (2, 3), (3, 4), (10, 11), (12, 11)]
+    reads = spark.sparkContext.accumulator(0)
+
+    def counted(x):
+        reads.add(1)
+        return x
+
+    counted_udf = F.udf(counted, "long")
+    edges = _edges(spark, pairs).select(
+        counted_udf("id_a").alias("id_a"), "id_b"
+    )
+    got = {r.node: r.component
+           for r in connected_components(edges).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10}
+    assert reads.value == len(pairs)

@@ -1147,10 +1147,10 @@ def test_create_table_partitioned_declaration_first_write_lays_out(
     spark, tmp_path
 ):
     """CREATE TABLE (cols) PARTITIONED BY (p) declares the layout on
-    an EMPTY table (.tabledef.json); the first data write replaces the
-    schema anchor with the real hive tree, and later writes get the
-    pruned partitioned paths. Includes the classic Delta pattern:
-    partition on a GENERATED date column."""
+    an EMPTY table (the table's metadata book, `definition` section);
+    the first data write replaces the schema anchor with the real hive
+    tree, and later writes get the pruned partitioned paths. Includes
+    the classic Delta pattern: partition on a GENERATED date column."""
     cat = Catalog(spark, str(tmp_path / "wh"))
     T3 = "silver.ev.clicks"
     run_table_sql(

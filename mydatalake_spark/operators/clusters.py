@@ -156,6 +156,7 @@ def connected_components(
             return out
 
     sym.unpersist()
+    labels.unpersist()
     raise RuntimeError(
         f"connected_components did not converge in {max_iters} "
         "iterations — the similarity threshold is connecting "

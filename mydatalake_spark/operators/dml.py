@@ -222,11 +222,13 @@ def delete_where(
     df = catalog.read(table)
 
     if partition_cols is None:
-        n_deleted = df.where(matched).count()
+        # one column-pruned scan answers both planning questions
+        n_deleted, n_rows = df.agg(
+            F.count_if(matched), F.count(F.lit(1))
+        ).first()
         if n_deleted == 0:
             return 0
-        # metadata-only count (no filter): parquet footers, no data scan
-        if n_deleted == df.count():
+        if n_deleted == n_rows:
             raise ValueError(
                 f"delete_where would remove every row of {table}; "
                 "use Catalog.truncate() (an empty parquet directory "

@@ -17,6 +17,15 @@ window per ``duplicated`` check, which Spark evaluates in the same
 stage chain). At 100 TB that is the difference between reading the
 table once and reading it seven times.
 
+Each ``duplicated`` window's input is hash-partitioned on its column
+to the session's shuffle width (``spark.sql.shuffle.partitions``).
+That repartition is the window's one exchange, and since its
+partition count is given, AQE does not coalesce it. Left to AQE, the
+narrow keyed rows of a small table coalesce to one partition, and the
+explode — which multiplies rows by the number of tests *after* the
+exchange — then produces and writes the whole long-format frame in a
+single task. At scale AQE would not coalesce those partitions anyway.
+
 Deliberate bug fixes vs the reference (SURVEY.md §7.4(5)):
 - ``not_in_list``: the reference passes a nested list to ``isin``
   (reference lib/checker.py:227) so every row fails; we splat values.
@@ -301,9 +310,14 @@ def annotate(
     # Stage 1: evaluate every failed-predicate as a plain boolean
     # column. Window expressions (the `duplicated` check) must resolve
     # at the top level of a projection — they cannot live inside the
-    # exploded array below — and evaluating here keeps it one pass.
+    # exploded array below. The row-local flags come first, in one
+    # projection, so the windows' exchanges ship booleans rather than
+    # the checked columns; each window then runs over input pinned to
+    # the shuffle width (module docstring).
+    width = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     flag_cols: list[str] = []
     flags: list[Column] = []
+    windows: list[tuple[str, Column]] = []
     for i, spec in enumerate(column_tests):
         column = spec["column"]
         test_type = spec["test_type"]
@@ -322,8 +336,13 @@ def annotate(
             )
         name = f"__failed_{i}__"
         flag_cols.append(name)
-        flags.append(failed.alias(name))
+        if test_type == "duplicated":
+            windows.append((column, failed.alias(name)))
+        else:
+            flags.append(failed.alias(name))
     keyed = keyed.select("*", *flags)
+    for column, failed in windows:
+        keyed = keyed.repartition(width, column).select("*", failed)
 
     # Stage 2: pack one struct per test and explode to long format.
     structs: list[Column] = []

@@ -87,7 +87,10 @@ SHOWCASE = [
         "dq_checks_lineitem",
         "All 7 declared quality checks compile into ONE projection emitting\n"
         "an array of per-test structs + explode — a single pass over the\n"
-        "table (one scan), not one scan per test as in the reference.",
+        "table (one scan), not one scan per test as in the reference. The\n"
+        "duplicated window's one exchange is a repartition to the shuffle\n"
+        "width (REPARTITION_BY_NUM), which AQE does not coalesce, so the\n"
+        "exploded long-format rows keep that many tasks.",
     ),
     (
         "similarity_topk",

@@ -30,8 +30,11 @@ def test_cc_star_and_cycle(spark):
 
 def test_cc_nonconvergence_raises(spark):
     edges = _edges(spark, [(1, 2), (2, 3)])
+    spark.catalog.clearCache()
     with pytest.raises(RuntimeError, match="converge"):
         connected_components(edges, max_iters=0)
+    # the raise path frees what the run persisted
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_dedup_clusters_keep_flags(spark):

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 from mydatalake_spark.catalog import Catalog
 from mydatalake_spark.quality import CheckRunner, TableCheck, annotate
 from mydatalake_spark.quality.checks import build_check, specs_from_meta
+from mydatalake_spark.quality.runner import AGG_KEYS
 from mydatalake_spark.schema import parse_table_meta
 
 PRICES_META = {
@@ -276,3 +277,76 @@ def test_foreign_key_shares_the_single_pass(spark):
     assert got[("1", "foreign_key")] == "passed"
     assert got[("2", "foreign_key")] == "failed"
     assert got[("2", "missing")] == "failed"
+
+
+def test_runner_annotates_each_row_once(spark, prices, tmp_path):
+    """The results write and the score rollup share one pass: every
+    checked row is computed once per run, not once for the write and
+    again for the aggregate."""
+    reads = spark.sparkContext.accumulator(0)
+
+    def counted(x):
+        reads.add(1)
+        return x
+
+    counted_udf = F.udf(counted, "string")
+    checked = prices.withColumn("symbol", counted_udf("symbol"))
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    meta = parse_table_meta(PRICES_META)
+    CheckRunner(spark, cat, run_date=AS_OF, as_of=AS_OF).execute(
+        [TableCheck(df=checked, meta=meta)]
+    )
+    assert reads.value == prices.count()
+
+
+def test_duplicated_check_keeps_shuffle_width(spark, prices):
+    """The long-format frame of a `duplicated` check keeps the session's
+    shuffle width instead of AQE's one-partition coalesce of a small
+    shuffle (the explode multiplies rows after the exchange)."""
+    out = annotate(
+        prices,
+        [{"column": "symbol", "test_type": "duplicated"},
+         {"column": "currency", "test_type": "missing"}],
+        ["symbol", "date"],
+    )
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert out.rdd.getNumPartitions() == width
+    assert out.count() == 2 * prices.count()
+
+
+def test_observed_rollup_equals_group_by_over_saved_results(
+    spark, prices, tmp_path
+):
+    """The rollup observed during the results write equals a GROUP BY
+    over the saved results table: two checked tables in one run, a
+    null mandate, an empty table (no rows, so no groups) and the
+    default run_date."""
+    silver = parse_table_meta(PRICES_META)
+    silver.columns[4].mandate = None  # volume's rule check
+    gold = parse_table_meta({**PRICES_META, "table_name": "prices_gold"})
+    empty = parse_table_meta({**PRICES_META, "table_name": "nothing"})
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    runner = CheckRunner(spark, cat, as_of=AS_OF)
+    agg = runner.execute([
+        TableCheck(df=prices, meta=silver),
+        TableCheck(df=prices.limit(5), meta=gold, layer="gold"),
+        TableCheck(df=prices.limit(0), meta=empty),
+    ])
+
+    saved = cat.read(runner.results_table)
+    expected = saved.groupBy(*AGG_KEYS).agg(
+        F.avg("check_score").alias("total_score"),
+        F.count(F.lit(1)).alias("columns_checked"),
+        F.sum(F.when(F.col("check_result") == "passed", 1).otherwise(0))
+        .alias("passing_cols"),
+        F.sum(F.when(F.col("check_result") == "passed", 0).otherwise(1))
+        .alias("failing_cols"),
+    )
+    assert agg.dtypes == expected.dtypes
+    got = sorted(agg.collect(), key=repr)
+    assert got == sorted(expected.collect(), key=repr)
+    assert {r.table_name for r in got} == {"prices", "prices_gold"}
+    assert any(r.mandate is None for r in got)
+    assert {r.run_date for r in got} == {
+        spark.sql("SELECT current_date()").first()[0]
+    }

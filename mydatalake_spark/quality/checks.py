@@ -18,13 +18,20 @@ stage chain). At 100 TB that is the difference between reading the
 table once and reading it seven times.
 
 Each ``duplicated`` window's input is hash-partitioned on its column
-to the session's shuffle width (``spark.sql.shuffle.partitions``).
-That repartition is the window's one exchange, and since its
-partition count is given, AQE does not coalesce it. Left to AQE, the
-narrow keyed rows of a small table coalesce to one partition, and the
-explode — which multiplies rows by the number of tests *after* the
-exchange — then produces and writes the whole long-format frame in a
-single task. At scale AQE would not coalesce those partitions anyway.
+to one wave of tasks: ``min(spark.sql.shuffle.partitions,
+defaultParallelism)``. That repartition is the window's one exchange,
+and since its partition count is given, AQE does not coalesce it.
+Left to AQE, the narrow keyed rows of a small table coalesce to one
+partition, and the explode — which multiplies rows by the number of
+tests *after* the exchange — then produces and writes the whole
+long-format frame in a single task. The cap at one wave keeps a small
+table from writing one tiny file per shuffle partition when the
+shuffle width is sized at 2-3x the cores: at width 32 on 4 cores, a
+2k-record check pinned to the full width wrote 32 result files, and
+writes 4 with the cap. A 2M-record table gets the 4 partitions AQE
+chose for it anyway. The price: a table large enough for AQE to keep
+more than one wave of partitions runs its windows in fewer, larger
+tasks.
 
 Deliberate bug fixes vs the reference (SURVEY.md §7.4(5)):
 - ``not_in_list``: the reference passes a nested list to ``isin``
@@ -313,8 +320,10 @@ def annotate(
     # exploded array below. The row-local flags come first, in one
     # projection, so the windows' exchanges ship booleans rather than
     # the checked columns; each window then runs over input pinned to
-    # the shuffle width (module docstring).
-    width = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    # one wave of tasks (module docstring).
+    spark = df.sparkSession
+    width = min(int(spark.conf.get("spark.sql.shuffle.partitions")),
+                spark.sparkContext.defaultParallelism)
     flag_cols: list[str] = []
     flags: list[Column] = []
     windows: list[tuple[str, Column]] = []

@@ -11,20 +11,18 @@ aggregation (reference lib/checker_handler.py:133-156), and the 6-key
 MERGE into the aggregated-history table
 (reference lib/checker_handler.py:158-194).
 
-The annotation runs once per check run. The score rollup is not a
-second GROUP BY over the results lineage (which would re-scan every
-checked table and redo every ``duplicated`` window): ``save_results``
-observes it during the results write — per group, the row count and
-the score sum, plus the run date — and ``aggregate_results`` turns
-those metrics into a small local frame.
+The annotation runs once per check run: the score rollup groups the
+saved results table, not the results lineage, which would re-scan
+every checked table and redo every ``duplicated`` window. Reading
+back the few narrow columns the GROUP BY needs costs less than
+recomputing them, and the rollup is collected into a local frame.
 
 Scale notes: the per-(record × test) results table is the largest
 artifact in the system at 100 TB (|rows| × |tests|); it is written
 partitioned by ``run_date`` (and can further partition by
 ``table_name``) so history accrues append-only per partition instead of
-rewriting one monolithic table. The observed rollup is a handful of
-aggregates per test folded into the write's tasks — no shuffle, and
-only (2 × groups + 1) values reach the driver.
+rewriting one monolithic table. The aggregation is a partial-agg-
+friendly groupBy (map-side combine) — tiny output, safe shuffle.
 """
 
 from __future__ import annotations
@@ -33,7 +31,7 @@ from dataclasses import dataclass, field
 from functools import reduce
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
@@ -42,13 +40,6 @@ from ..schema import TableMeta
 from .checks import annotate, specs_from_meta
 
 AGG_KEYS = ["test_name", "table_name", "test_type", "layer", "run_date", "mandate"]
-# every rollup key but run_date, which is one value per run
-GROUP_KEYS = [k for k in AGG_KEYS if k != "run_date"]
-AGG_SCHEMA = (
-    "test_name string, table_name string, test_type string, layer string, "
-    "run_date date, mandate string, total_score double, "
-    "columns_checked bigint, passing_cols bigint, failing_cols bigint"
-)
 
 
 @dataclass
@@ -102,58 +93,33 @@ class CheckRunner:
 
     def compile_results(self, checks: list[TableCheck]) -> DataFrame:
         """unionByName fold over per-table frames
-        (reference lib/checker.py:308, lib/checker_handler.py:101-113).
-        The frame carries its rollup groups (``GROUP_KEYS`` tuples, one
-        per distinct declared test) as ``_dq_groups``."""
+        (reference lib/checker.py:308, lib/checker_handler.py:101-113)."""
         frames = [self.annotate_table(c) for c in checks]
         if not frames:
             raise ValueError("no tables to check")
-        results = reduce(lambda a, b: a.unionByName(b), frames)
-        results._dq_groups = list(dict.fromkeys(
-            (spec["test_name"], c.table_name, spec["test_type"], c.layer,
-             spec["mandate"])
-            for c in checks for spec in specs_from_meta(c.meta)
-        ))
-        return results
+        return reduce(lambda a, b: a.unionByName(b), frames)
 
     def save_results(self, results: DataFrame) -> None:
         """TRUNCATE + overwrite (reference lib/checker_handler.py:116-131),
-        partitioned by run_date for append-only history at scale. The
-        write observes the rollup (module docstring) into
-        ``results._dq_rollup``; group keys compare null-safely."""
-        rollup = Observation()
-        metrics = [F.max("run_date").alias("run_date")]
-        for i, group in enumerate(results._dq_groups):
-            hit = reduce(Column.__and__, [
-                F.col(k).eqNullSafe(F.lit(v)) for k, v in zip(GROUP_KEYS, group)
-            ])
-            metrics += [
-                F.count_if(hit).alias(f"n{i}"),
-                F.sum(F.when(hit, F.col("check_score"))).alias(f"s{i}"),
-            ]
+        partitioned by run_date for append-only history at scale."""
         self.catalog.truncate(self.results_table)
-        self.catalog.overwrite(results.observe(rollup, *metrics),
-                               self.results_table, partition_by=["run_date"])
-        results._dq_rollup = rollup
+        self.catalog.overwrite(results, self.results_table,
+                               partition_by=["run_date"])
 
     def aggregate_results(self, results: DataFrame) -> DataFrame:
-        """Scores rollup (reference lib/checker_handler.py:133-156) from
-        the metrics :meth:`save_results` observed, with the GROUP BY's
-        columns and types: ``check_score`` is 1 exactly when the check
-        passed, and a group with no rows emits no row. The frame is
-        local, so a later run's truncate of the results table leaves
-        it valid."""
-        m = results._dq_rollup.get
-        rows = []
-        for i, (test_name, table_name, test_type, layer, mandate) in enumerate(
-            results._dq_groups
-        ):
-            n, passing = m[f"n{i}"], m[f"s{i}"]
-            if n:
-                rows.append((test_name, table_name, test_type, layer,
-                             m["run_date"], mandate, passing / n, n,
-                             passing, n - passing))
-        return self.spark.createDataFrame(rows, AGG_SCHEMA)
+        """Scores rollup (reference lib/checker_handler.py:133-156);
+        identical output column names. The rollup is collected into a
+        local frame, so it stays valid after a later run truncates the
+        results table it was grouped from."""
+        rollup = results.groupBy(*AGG_KEYS).agg(
+            F.avg("check_score").alias("total_score"),
+            F.count(F.lit(1)).alias("columns_checked"),
+            F.sum(F.when(F.col("check_result") == "passed", 1).otherwise(0))
+            .alias("passing_cols"),
+            F.sum(F.when(F.col("check_result") == "passed", 0).otherwise(1))
+            .alias("failing_cols"),
+        )
+        return self.spark.createDataFrame(rollup.collect(), rollup.schema)
 
     def upsert_history(self, aggregated: DataFrame) -> None:
         """6-key equi MERGE into history
@@ -177,9 +143,15 @@ class CheckRunner:
         with log_duration("checks", tables=[c.table_name for c in checks]):
             results = self.compile_results(checks)
             self.save_results(results)
-        # The annotation ran once, inside the results write, which also
-        # observed the rollup; aggregating reads no table and re-runs no
-        # check.
-        aggregated = self.aggregate_results(results)
+        # Group the saved rows, not the lineage: re-running the lineage
+        # would annotate every checked table a second time. Parquet is
+        # read with the lineage's schema: no footer-inference job, and
+        # a run that saved no rows (no data file) reads as empty.
+        reader = self.spark.read.format(self.catalog.fmt)
+        if self.catalog.fmt != "delta":  # Delta keeps its schema in its log
+            reader = reader.schema(results.schema)
+        aggregated = self.aggregate_results(
+            reader.load(self.catalog.path(self.results_table))
+        )
         self.upsert_history(aggregated)
         return aggregated

@@ -88,9 +88,10 @@ SHOWCASE = [
         "All 7 declared quality checks compile into ONE projection emitting\n"
         "an array of per-test structs + explode — a single pass over the\n"
         "table (one scan), not one scan per test as in the reference. The\n"
-        "duplicated window's one exchange is a repartition to the shuffle\n"
-        "width (REPARTITION_BY_NUM), which AQE does not coalesce, so the\n"
-        "exploded long-format rows keep that many tasks.",
+        "duplicated window's one exchange is a repartition to one wave of\n"
+        "tasks (REPARTITION_BY_NUM: the shuffle width, capped at the default\n"
+        "parallelism), which AQE does not coalesce, so the exploded\n"
+        "long-format rows keep that many tasks.",
     ),
     (
         "similarity_topk",

@@ -299,42 +299,43 @@ def test_runner_annotates_each_row_once(spark, prices, tmp_path):
     assert reads.value == prices.count()
 
 
-def test_duplicated_check_keeps_shuffle_width(spark, prices):
-    """The long-format frame of a `duplicated` check keeps the session's
-    shuffle width instead of AQE's one-partition coalesce of a small
-    shuffle (the explode multiplies rows after the exchange)."""
+def test_duplicated_check_keeps_one_wave_of_tasks(spark, prices):
+    """The long-format frame of a `duplicated` check keeps one wave of
+    tasks (the shuffle width, capped at the default parallelism)
+    instead of AQE's one-partition coalesce of a small shuffle (the
+    explode multiplies rows after the exchange)."""
     out = annotate(
         prices,
         [{"column": "symbol", "test_type": "duplicated"},
          {"column": "currency", "test_type": "missing"}],
         ["symbol", "date"],
     )
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    width = min(int(spark.conf.get("spark.sql.shuffle.partitions")),
+                spark.sparkContext.defaultParallelism)
+    assert width > 1
     assert out.rdd.getNumPartitions() == width
     assert out.count() == 2 * prices.count()
 
 
-def test_observed_rollup_equals_group_by_over_saved_results(
-    spark, prices, tmp_path
-):
-    """The rollup observed during the results write equals a GROUP BY
-    over the saved results table: two checked tables in one run, a
-    null mandate, an empty table (no rows, so no groups) and the
-    default run_date."""
+def test_rollup_equals_group_by_over_checked_lineage(spark, prices, tmp_path):
+    """The rollup grouped from the saved results table equals the
+    reference's GROUP BY over the results lineage, columns and types
+    included: two checked tables in one run, a null mandate, an empty
+    table (no rows, so no groups) and the default run_date."""
     silver = parse_table_meta(PRICES_META)
     silver.columns[4].mandate = None  # volume's rule check
     gold = parse_table_meta({**PRICES_META, "table_name": "prices_gold"})
     empty = parse_table_meta({**PRICES_META, "table_name": "nothing"})
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    runner = CheckRunner(spark, cat, as_of=AS_OF)
-    agg = runner.execute([
+    checks = [
         TableCheck(df=prices, meta=silver),
         TableCheck(df=prices.limit(5), meta=gold, layer="gold"),
         TableCheck(df=prices.limit(0), meta=empty),
-    ])
+    ]
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    runner = CheckRunner(spark, cat, as_of=AS_OF)
+    agg = runner.execute(checks)
 
-    saved = cat.read(runner.results_table)
-    expected = saved.groupBy(*AGG_KEYS).agg(
+    expected = runner.compile_results(checks).groupBy(*AGG_KEYS).agg(
         F.avg("check_score").alias("total_score"),
         F.count(F.lit(1)).alias("columns_checked"),
         F.sum(F.when(F.col("check_result") == "passed", 1).otherwise(0))
@@ -350,3 +351,16 @@ def test_observed_rollup_equals_group_by_over_saved_results(
     assert {r.run_date for r in got} == {
         spark.sql("SELECT current_date()").first()[0]
     }
+
+
+def test_runner_run_of_empty_tables_rolls_up_nothing(spark, prices, tmp_path):
+    """A run whose tables have no rows saves no results file; its
+    rollup is empty, run after run, instead of failing to read the
+    results table back."""
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    runner = CheckRunner(spark, cat, run_date=AS_OF, as_of=AS_OF)
+    check = TableCheck(df=prices.limit(0), meta=parse_table_meta(PRICES_META))
+    for _ in range(2):
+        agg = runner.execute([check])
+        assert agg.count() == 0
+        assert "total_score" in agg.columns

@@ -1151,12 +1151,12 @@ FROM orders WHERE o_orderkey % 7 = 2
 def cdf_part_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition-pruned Change Data Feed (r10, VERDICT r9 ask #4 —
     catalog.py:table_changes partition_cols= + snapshot()): orders
-    partitioned by priority land in a versioned warehouse; a hardlink
-    snapshot (catalog.py:snapshot — O(#files) metadata) checkpoints
-    v1, a partition-scoped CDC merge confined to the '1-URGENT' leaf
-    (keys ≡0 mod 5 repriced ×1.2, keys ≡1 mod 5 cloned in under
-    key+200000000) swaps ONE leaf in place, and a second snapshot
-    checkpoints v2. The feed between the two versions probes leaf
+    partitioned by priority land in a versioned warehouse; a
+    partition-scoped CDC merge confined to the '1-URGENT' leaf (keys
+    ≡0 mod 5 repriced ×1.2, keys ≡1 mod 5 cloned in under
+    key+200000000) swaps ONE leaf in place, its commit retaining the
+    pre-state as v1 (a hardlink snapshot — O(#files) metadata), and
+    an explicit snapshot (catalog.py:snapshot) checkpoints v2. The feed between the two versions probes leaf
     file metadata (untouched leaves share inodes across hardlink
     snapshots) and scans ONLY the touched partition on both sides —
     plan-asserted in tests/test_plans.py — while the oracle derives
@@ -1195,7 +1195,8 @@ def cdf_part_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tbl = "silver.sales.orders_cdfp"
     cat.overwrite(base, tbl, partition_by=["o_orderpriority"])
-    cat.snapshot(tbl)
+    # the merge's commit retains the pre-state as v1 (a hardlink
+    # snapshot); the explicit snapshot after it pins v2
     touched = merge_upsert_partitioned(
         cat, tbl, change,
         keys=["o_orderkey", "o_orderpriority"],

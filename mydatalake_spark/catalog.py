@@ -155,8 +155,36 @@ def _touched_partitions(
     return touched
 
 
+def _raw_leaf_dirs(root: str, pcols: list[str]) -> set[str]:
+    """Relative paths of every hive-layout LEAF partition directory
+    under ``root``, in Spark's own dirname encoding (``date=2024-01-02/
+    region=EU``). Staying in dirname space is the point: comparing two
+    Spark-written trees never re-implements Spark's value→dirname
+    escaping (which _leaf_partition_files must unquote for predicate
+    values — here we need the opposite direction, so we never decode)."""
+    out: set[str] = set()
+
+    def walk(d: str, depth: int, rel: str) -> None:
+        if depth == len(pcols):
+            out.add(rel)
+            return
+        prefix = f"{pcols[depth]}="
+        if not os.path.isdir(d):
+            return
+        for entry in os.listdir(d):
+            if entry.startswith(prefix):
+                walk(
+                    os.path.join(d, entry),
+                    depth + 1,
+                    os.path.join(rel, entry) if rel else entry,
+                )
+
+    walk(root, 0, "")
+    return out
+
+
 #: Reserved table-directory suffixes for in-flight write staging
-#: (overwrite_via_staging, overwrite_partitions, operators/dml.py).
+#: (Catalog._stage: overwrites, appends, partition rewrites, DML).
 #: vacuum() treats orphans with these suffixes as reclaimable, and
 #: list_tables() never reports them as tables — a crashed write's husk
 #: must not surface as a phantom catalog entry.
@@ -292,13 +320,12 @@ class Catalog:
     fmt: str = "parquet"
     # Poor-man's time travel on parquet: keep the last N table states
     # as hidden sibling snapshot dirs (Delta gets this from its log;
-    # the reference relies on that). 0 = off (no extra I/O: snapshots
-    # are directory RENAMES, never copies). Versioning is table-level;
-    # partition-scoped rewrites (overwrite_partitions) don't snapshot
-    # implicitly — call snapshot() around them instead: it checkpoints
-    # via HARDLINKS (O(#files) metadata, untouched leaves share
-    # inodes), which is also what makes table_changes'
-    # partition-pruned diff able to PROVE leaves untouched.
+    # the reference relies on that). 0 = off. The one place versioning
+    # is decided: every commit (_publish) retains its pre-state — a
+    # directory RENAME for a whole-table swap, HARDLINKS for a leaf
+    # swap or an append (O(#files) metadata, never a byte copy;
+    # untouched leaves share inodes, which is what lets
+    # table_changes' partition-pruned diff PROVE them untouched).
     keep_versions: int = 0
     # Commit clock: () -> epoch seconds, stamped on every committed
     # write (_invalidate). Default None = wall clock (time.time).
@@ -891,13 +918,15 @@ class Catalog:
             )
         return 1 + max(hwm, top)
 
-    def _prune_versions(self, full_name: str) -> None:
-        """Retire retained snapshots beyond ``keep_versions``."""
+    def _prune_versions(self, full_name: str, pin: str | None = None) -> None:
+        """Retire retained snapshots beyond ``keep_versions``, never
+        the ``pin`` label (restore's source)."""
         root = self._version_root(full_name)
         for stale in self.versions(full_name)[: -self.keep_versions]:
-            shutil.rmtree(os.path.join(root, stale), ignore_errors=True)
+            if stale != pin:
+                shutil.rmtree(os.path.join(root, stale), ignore_errors=True)
 
-    def _snapshot_or_drop(self, full_name: str) -> dict:
+    def _snapshot_or_drop(self, full_name: str, pin: str | None = None) -> dict:
         """Move the current table dir aside as a snapshot (a rename,
         not a copy) and prune beyond ``keep_versions`` — or just drop
         it when versioning is off. Returns ``{label: commit time}`` of
@@ -915,15 +944,14 @@ class Catalog:
         label = f"v{self._next_version(full_name):08d}"
         os.makedirs(self._version_root(full_name), exist_ok=True)
         os.replace(final, os.path.join(self._version_root(full_name), label))
-        self._prune_versions(full_name)
+        self._prune_versions(full_name, pin)
         return {label: ct}
 
     def snapshot(self, full_name: str, expected_token=False) -> int:
         """Checkpoint the LIVE table state as a new retained version
-        without replacing it — the versioning hook for write paths
-        that mutate in place (``overwrite_partitions`` /
-        ``merge_upsert_partitioned`` swap leaf directories and cannot
-        go through the rename-on-overwrite snapshot).
+        without replacing it. Every write already retains its own
+        pre-state (:meth:`_publish`); this pins the CURRENT state, for
+        example as the right-hand side of a ``table_changes`` range.
 
         Runs under the publish lock so the hardlink walk never tears
         against a concurrent staging swap; ``expected_token`` (a
@@ -942,8 +970,7 @@ class Catalog:
         (name, size, mtime, inode) file sets) instead of re-scanning
         it. Returns the assigned version number."""
         with self._publish_lock(full_name):
-            if expected_token is not False:
-                self._check_expected(full_name, expected_token)
+            self._check_expected(full_name, expected_token)
             snap = self._snapshot_live(full_name)
             # the live state did not change: no commit stamp
             self._invalidate(full_name, stamp=False, snapshots=snap)
@@ -973,6 +1000,99 @@ class Catalog:
         self._prune_versions(full_name)
         return {label: ct}
 
+    def _stage(
+        self,
+        df: DataFrame,
+        full_name: str,
+        suffix: str,
+        partition_by: list[str] | None = None,
+    ) -> str:
+        """Write ``df`` into the table's ``suffix`` staging directory
+        (one of ``_STAGING_SUFFIXES``), replacing any leftover there,
+        and return its path — the first half of every plain-file
+        write; :meth:`_publish` is the second. A write that raises
+        removes what it staged and leaves the live table untouched."""
+        staging = self.path(full_name) + suffix
+        shutil.rmtree(staging, ignore_errors=True)
+        writer = df.write.format(self.fmt).mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        try:
+            writer.save(staging)
+        except BaseException:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
+        return staging
+
+    def _publish(
+        self,
+        full_name: str,
+        staging: str,
+        expected_token=False,
+        *,
+        leaves: set[str] | None = None,
+        emptied: set[str] = frozenset(),
+        files: bool = False,
+        txn: tuple[str, int] | None = None,
+        pin: str | None = None,
+    ) -> None:
+        """Commit a staged write — the one commit point of every
+        plain-file write. Under the table's publish lock: (1) check
+        the OCC token (``False``: a blind writer; a conflict removes
+        ``staging`` and raises :class:`ConcurrentWriteException`),
+        (2) retain the pre-state per ``keep_versions``, (3) swap,
+        (4) make ONE book update (:meth:`_invalidate`, carrying an
+        append's ``txn``). The swap replaces the whole directory by
+        default (pre-state RENAMED aside; pruning keeps ``pin``,
+        restore's source); with ``leaves`` (hive-relative paths under
+        ``staging``) only those leaf directories, removing the
+        ``emptied`` ones; with ``files`` it moves each staged data
+        file into the live tree (append). The last two keep the rest
+        in place, so their pre-state is a hardlink snapshot sharing
+        inodes with the live files. flock does not nest, so nothing
+        in here calls a public write method."""
+        final = self.path(full_name)
+        with self._publish_lock(full_name):
+            try:
+                self._check_expected(full_name, expected_token)
+            except ConcurrentWriteException:
+                shutil.rmtree(staging, ignore_errors=True)
+                raise
+            if leaves is None and not files:
+                snap = self._snapshot_or_drop(full_name, pin)
+                os.replace(staging, final)
+            else:
+                snap = (
+                    self._snapshot_live(full_name)
+                    if self.keep_versions > 0 and os.path.isdir(final)
+                    else {}
+                )
+                moves = (
+                    [os.path.relpath(f, staging) for f in data_files(staging)]
+                    if files
+                    else sorted(leaves)
+                )
+                for rel in moves:
+                    dst = os.path.join(final, rel)
+                    os.makedirs(os.path.dirname(dst), exist_ok=True)
+                    if not files:
+                        shutil.rmtree(dst, ignore_errors=True)
+                    os.replace(os.path.join(staging, rel), dst)
+                for rel in sorted(emptied):
+                    shutil.rmtree(os.path.join(final, rel), ignore_errors=True)
+                    # prune now-empty intermediate levels so a later
+                    # leaf walk doesn't report a valueless husk
+                    parent = os.path.dirname(os.path.join(final, rel))
+                    while (
+                        parent != final
+                        and os.path.isdir(parent)
+                        and not os.listdir(parent)
+                    ):
+                        os.rmdir(parent)
+                        parent = os.path.dirname(parent)
+                shutil.rmtree(staging, ignore_errors=True)
+            self._invalidate(full_name, snapshots=snap, txn=txn)
+
     def overwrite(
         self,
         df: DataFrame,
@@ -986,40 +1106,17 @@ class Catalog:
         (SURVEY.md §7.4(8)): date-partitioned layout enables partition
         pruning + dynamic partition overwrite downstream.
 
-        On Delta the directory is left alone: Delta's ``overwrite``
-        mode is transactional and its _delta_log already provides
-        versioning/time travel, and rmtree-ing the live dir before the
-        lazy plan runs would delete the log (and the files a
-        self-referencing plan still needs to scan). Snapshot/drop is a
-        plain-file-format mechanism only.
-        """
-        if self.fmt != "delta" and self.constraints(full_name):
-            # CHECK enforcement makes mid-write failure a ROUTINE
-            # outcome; the drop-then-write below would leave no live
-            # table on keep_versions=0 when the guard fires. Route
-            # through the staging swap: a violating write aborts into
-            # staging, the live table never moves.
-            self.overwrite_via_staging(
-                df, full_name, partition_by,
-                _preclustered=_preclustered,
-            )
-            return
-        df = self._with_check_guards(df, full_name)
-        if not _preclustered:
-            df = self._apply_declared_clustering(
-                df, full_name, partition_by
-            )
-        snap = self._snapshot_or_drop(full_name) if self.fmt != "delta" else {}
-        writer = df.write.format(self.fmt).mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.save(self.path(full_name))
-        self._invalidate(full_name, snapshots=snap)
-        if self.declared_cluster_cols(full_name):
-            # the whole table now carries the declared layout (the
-            # clustering hook or a _preclustered caller produced it):
-            # refresh the liquid-clustering file book
-            self._mark_clustered_current(full_name)
+        A blind write (no OCC token) through the same stage-then-
+        publish commit as :meth:`overwrite_via_staging`: the rows are
+        written to staging first, so a write that fails (a CHECK
+        guard, a task error) leaves the live table and its versions
+        as they were, and a plan that reads the table it overwrites is
+        safe. On Delta, Delta's own transactional ``overwrite`` runs
+        instead; its _delta_log provides the versioning."""
+        self.overwrite_via_staging(
+            df, full_name, partition_by,
+            _preclustered=_preclustered, expected_token=False,
+        )
 
     def carry_marker_files(self, full_name: str, staging: str) -> None:
         """Hardlink the live table directory's dot-prefixed marker
@@ -1062,9 +1159,10 @@ class Catalog:
         Lazily reading and overwriting the same parquet directory is
         undefined in OSS Spark (the scan would see its own deletes), so
         the result is materialized to ``{path}__staging`` first and then
-        swapped in. On Delta the overwrite is transactional (snapshot
-        isolation: the scan reads the pre-commit version), so it
-        delegates to a plain overwrite — no staging copy.
+        swapped in (:meth:`_stage`, then :meth:`_publish`). On Delta
+        the overwrite is transactional (snapshot isolation: the scan
+        reads the pre-commit version), so Delta's own ``overwrite``
+        runs — no staging copy.
 
         ``commit_marker``: an optional ``(filename, contents)`` small
         file written INTO the staging directory before the swap, so it
@@ -1087,17 +1185,17 @@ class Catalog:
         """
         if expected_token is _AUTO_TOKEN:
             expected_token = self.commit_token(full_name)
-        if self.fmt == "delta":
-            if commit_marker is not None:
+        if commit_marker is not None:
+            if self.fmt == "delta":
                 raise ValueError(
                     "commit_marker is a staging-swap feature; on Delta "
                     "use txnAppId/txnVersion idempotent writes instead"
                 )
-            self.overwrite(
-                df, full_name, partition_by,
-                _preclustered=_preclustered,
-            )
-            return
+            if not commit_marker[0].startswith((".", "_")):
+                raise ValueError(
+                    f"commit_marker filename {commit_marker[0]!r} must "
+                    "start with '.' or '_' so table scans ignore it"
+                )
         df = self._with_check_guards(df, full_name)
         if not _preclustered:
             # clustering-on-write for CLUSTER BY tables; writers that
@@ -1107,34 +1205,25 @@ class Catalog:
             df = self._apply_declared_clustering(
                 df, full_name, partition_by
             )
-        final = self.path(full_name)
-        staging = final + "__staging"
-        shutil.rmtree(staging, ignore_errors=True)
-        writer = df.write.format(self.fmt).mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.save(staging)
-        if commit_marker is not None:
-            fname, contents = commit_marker
-            if not fname.startswith((".", "_")):
-                raise ValueError(
-                    f"commit_marker filename {fname!r} must start with "
-                    "'.' or '_' so table scans ignore it"
-                )
-            with open(os.path.join(staging, fname), "w") as fh:
-                fh.write(contents)
-        if carry_markers:
-            self.carry_marker_files(full_name, staging)
-        with self._publish_lock(full_name):
-            try:
-                self._check_expected(full_name, expected_token)
-            except ConcurrentWriteException:
-                shutil.rmtree(staging, ignore_errors=True)
-                raise
-            snap = self._snapshot_or_drop(full_name)
-            os.replace(staging, final)
-            self._invalidate(full_name, snapshots=snap)
+        if self.fmt == "delta":
+            writer = df.write.format("delta").mode("overwrite")
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.save(self.path(full_name))
+            self._invalidate(full_name)
+        else:
+            staging = self._stage(df, full_name, "__staging", partition_by)
+            if commit_marker is not None:
+                fname, contents = commit_marker
+                with open(os.path.join(staging, fname), "w") as fh:
+                    fh.write(contents)
+            if carry_markers:
+                self.carry_marker_files(full_name, staging)
+            self._publish(full_name, staging, expected_token)
         if self.declared_cluster_cols(full_name):
+            # the whole table now carries the declared layout (the
+            # clustering hook or a _preclustered caller produced it):
+            # refresh the liquid-clustering file book
             self._mark_clustered_current(full_name)
 
     def _append_txn_seen(self, full_name: str, txn_id: str) -> bool:
@@ -1196,13 +1285,14 @@ class Catalog:
         future reader). A non-existent table is created
         (``mode("append")`` semantics).
 
-        Versioning: the pre-state is checkpointed as a hardlink
-        snapshot first (when ``keep_versions > 0``), so time travel
-        shows the table before the append and ``table_changes`` over
-        it yields pure inserts. Atomicity is PER FILE, like
-        overwrite_partitions: a reader racing the move may see a
-        subset of the new files (Delta gets cross-file atomicity from
-        its log).
+        Commit: stage, then :meth:`_publish` — under the publish lock
+        the pre-state is retained as a hardlink snapshot (when
+        ``keep_versions > 0``), so time travel shows the table before
+        the append and ``table_changes`` over it yields pure inserts;
+        then the files move and one book update records the commit
+        (with the ``txn_id`` token). Atomicity is PER FILE: a reader
+        racing the move may see a subset of the new files (Delta gets
+        cross-file atomicity from its log).
 
         Replay contract: WITHOUT ``txn_id``, re-running the same
         append doubles rows (appends carry no row identity — the
@@ -1218,10 +1308,13 @@ class Catalog:
           moved file is name-prefixed ``txn-{id}-``) and removed
           before the retry re-moves the full staged batch — the
           replay converges instead of doubling the partial;
-        - a crashed FIRST batch (table created by the txn) is handled
-          by the same cleanup: emptying the table removes the husk
-          and the retry re-takes the create path, which stages,
-          prefixes, and goes live in ONE atomic directory rename.
+        - a FIRST batch (table created by the txn, or the first into
+          a declared-partitioned empty table) goes live in ONE atomic
+          directory rename carrying a ``.txn-{id}-create`` marker: a
+          replay that finds the marker records the landed batch
+          instead of re-appending it; without the marker the same
+          cleanup empties the table, removes the husk, and the retry
+          re-takes the create path.
 
         A replayed-after-crash append may retain one extra identical
         snapshot version (the retry checkpoints again); retention
@@ -1259,13 +1352,13 @@ class Catalog:
                 self.path(full_name), f".txn-{txn_id}-create"
             )
             if os.path.exists(marker):
-                # the DECLARED-EMPTY first write (below) swaps the
-                # whole directory in with this marker inside it, then
-                # records the token; a crash between swap and record
-                # leaves the marker as proof the batch landed — the
-                # retry must NOT re-append it through the file-move
-                # path (layout detection now succeeds, so the
-                # declared-empty branch is unreachable on replay)
+                # a whole-directory first write (_append_staged)
+                # swaps the directory in with this marker inside it;
+                # a crash between the swap and the book update leaves
+                # the marker as proof the batch landed — the retry
+                # must NOT re-append it through the file-move path
+                # (the table exists now, so the first-write branches
+                # are unreachable on replay)
                 n = self.read(full_name).count()
                 # record BEFORE removing the proof: a crash in between
                 # leaves a recorded token, never a lost one
@@ -1284,51 +1377,13 @@ class Catalog:
                 if n:
                     self.overwrite(df, full_name, partition_by=partition_by)
                 return n
-            # exactly-once create path: stage (CHECK guards ride the
-            # write), prefix the file names, go live in ONE atomic
-            # directory rename, then record the token. A crash at any
-            # point either leaves nothing live or leaves a fully-
-            # prefixed table without its token — both states the
-            # replay cleanup converges from.
-            base = self.path(full_name)
-            staging = base + "__appstaging"
-            shutil.rmtree(staging, ignore_errors=True)
-            writer = (
-                self._with_check_guards(df, full_name)
-                .write.format(self.fmt)
-                .mode("overwrite")
+            # exactly-once create path: the staged batch goes live in
+            # ONE atomic directory rename, its token recorded in the
+            # same commit
+            return self._append_staged(
+                self._with_check_guards(df, full_name), full_name,
+                partition_by, txn_id, expected_token, files=False,
             )
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.save(staging)
-            n = (
-                self.spark.read.format(self.fmt)
-                .schema(df.schema)
-                .load(staging)
-                .count()
-            )
-            if n == 0:
-                shutil.rmtree(staging, ignore_errors=True)
-                self._invalidate(full_name, txn=(txn_id, 0))
-                return 0
-            for dirpath, _dirs, files in os.walk(staging):
-                for f in files:
-                    if f.startswith((".", "_")):
-                        continue
-                    os.replace(
-                        os.path.join(dirpath, f),
-                        os.path.join(dirpath, f"txn-{txn_id}-{f}"),
-                    )
-            os.makedirs(os.path.dirname(base), exist_ok=True)
-            with self._publish_lock(full_name):
-                try:
-                    self._check_expected(full_name, expected_token)
-                except ConcurrentWriteException:
-                    shutil.rmtree(staging, ignore_errors=True)
-                    raise
-                os.replace(staging, base)
-                self._invalidate(full_name, txn=(txn_id, n))
-            return n
         live = self.read(full_name)
         # a feed may omit declared GENERATED columns — compute them
         # before the strict column-set check (supplied ones keep the
@@ -1371,6 +1426,9 @@ class Catalog:
                 "explicitly; mixed-type part files would poison the "
                 "directory for every future reader"
             )
+        guarded = self._with_check_guards(
+            aligned, full_name, skip_generated=True
+        )
         if (
             self.fmt != "delta"
             and partition_by
@@ -1387,25 +1445,10 @@ class Catalog:
             # somehow holds unpartitioned rows keeps plain-append
             # semantics rather than silently dropping them.
             if live.limit(1).count() == 0:
-                self.overwrite_via_staging(
-                    aligned, full_name, partition_by=partition_by,
-                    commit_marker=(
-                        (f".txn-{txn_id}-create", txn_id)
-                        if txn_id is not None
-                        else None
-                    ),
+                return self._append_staged(
+                    guarded, full_name, partition_by, txn_id,
+                    expected_token, files=False,
                 )
-                n = self.read(full_name).count()  # footer metadata
-                if txn_id is not None:
-                    self._invalidate(
-                        full_name, stamp=False, txn=(txn_id, n)
-                    )
-                    marker = os.path.join(
-                        self.path(full_name), f".txn-{txn_id}-create"
-                    )
-                    if os.path.exists(marker):
-                        os.remove(marker)
-                return n
             # declared-partitioned but rows already live UNPARTITIONED
             # (e.g. an explicit partition_by=None first write): leaf
             # dirs beside root files would be a mixed layout Spark
@@ -1419,73 +1462,71 @@ class Catalog:
             # checks above.
             n = aligned.count()
             if n:
-                writer = (
-                    self._with_check_guards(
-                        aligned, full_name, skip_generated=True
-                    )
-                    .write.format("delta")
-                    .mode("append")
-                )
+                writer = guarded.write.format("delta").mode("append")
                 if partition_by:
                     writer = writer.partitionBy(*partition_by)
                 writer.save(self.path(full_name))
                 self._invalidate(full_name)
             return n
-        staging = self.path(full_name) + "__appstaging"
-        shutil.rmtree(staging, ignore_errors=True)
-        writer = (
-            self._with_check_guards(
-                aligned, full_name, skip_generated=True
-            )
-            .write.format(self.fmt)
-            .mode("overwrite")
+        return self._append_staged(
+            guarded, full_name, partition_by, txn_id, expected_token,
+            files=True,
         )
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.save(staging)
+
+    def _append_staged(
+        self,
+        guarded: DataFrame,
+        full_name: str,
+        partition_by: list[str] | None,
+        txn_id: str | None,
+        expected_token,
+        files: bool,
+    ) -> int:
+        """Stage an append batch, then publish it: ``files`` moves the
+        staged data files into the live tree; otherwise the staged
+        directory goes live whole (the batch that creates the table,
+        or the first into a declared-partitioned empty one). Returns
+        the rows appended."""
+        staging = self._stage(
+            guarded, full_name, "__appstaging", partition_by
+        )
         # metadata-only count off the staged parquet footers; the
         # explicit schema keeps an EMPTY partitioned staging readable
         # (0 rows write only _SUCCESS, which cannot infer a schema)
         n = (
             self.spark.read.format(self.fmt)
-            .schema(aligned.schema)
+            .schema(guarded.schema)
             .load(staging)
             .count()
         )
         if n == 0:
             shutil.rmtree(staging, ignore_errors=True)
+            if txn_id is not None and not files:
+                self._invalidate(full_name, txn=(txn_id, 0))
             return 0
-        base = self.path(full_name)
-        with self._publish_lock(full_name):
-            try:
-                self._check_expected(full_name, expected_token)
-            except ConcurrentWriteException:
-                shutil.rmtree(staging, ignore_errors=True)
-                raise
-            snap = (
-                self._snapshot_live(full_name)
-                if self.keep_versions > 0
-                else {}
-            )
-            for dirpath, _dirs, files in os.walk(staging):
-                for f in files:
-                    if f.startswith((".", "_")):
-                        continue
-                    src = os.path.join(dirpath, f)
-                    name = f if txn_id is None else f"txn-{txn_id}-{f}"
-                    rel = os.path.join(
-                        os.path.dirname(os.path.relpath(src, staging)),
-                        name,
-                    )
-                    dst = os.path.join(base, rel)
-                    os.makedirs(os.path.dirname(dst), exist_ok=True)
-                    os.replace(src, dst)
-            shutil.rmtree(staging, ignore_errors=True)
-            self._invalidate(
-                full_name,
-                snapshots=snap,
-                txn=None if txn_id is None else (txn_id, n),
-            )
+        marker = f".txn-{txn_id}-create"
+        if txn_id is not None:
+            # the txn- name prefix lets a replay recognize (and remove)
+            # a crashed attempt's partially moved files
+            for f in data_files(staging):
+                os.replace(
+                    f,
+                    os.path.join(
+                        os.path.dirname(f),
+                        f"txn-{txn_id}-{os.path.basename(f)}",
+                    ),
+                )
+            if not files:
+                # rides the directory swap: proof the batch landed if
+                # the process dies before the book records the token
+                with open(os.path.join(staging, marker), "w") as fh:
+                    fh.write(txn_id)
+        self._publish(
+            full_name, staging, expected_token, files=files,
+            txn=None if txn_id is None else (txn_id, n),
+        )
+        if txn_id is not None and not files:
+            os.remove(os.path.join(self.path(full_name), marker))
         return n
 
     def read_marker(self, full_name: str, filename: str) -> str | None:
@@ -2271,7 +2312,6 @@ class Catalog:
         full_name: str,
         partition_col: str | list[str],
         values: list,
-        pre_swap=None,
     ) -> None:
         """Rewrite ONLY the named partitions (Delta ``replaceWhere`` /
         dynamic-partition-overwrite analogue): ``df`` must contain
@@ -2284,61 +2324,36 @@ class Catalog:
         and the swap replaces leaf directories only — sibling leaves
         under a touched first-level directory survive byte-identical.
 
-        Atomicity is PER PARTITION (each swap is one directory
-        rename): a crash mid-loop leaves some partitions new and some
-        old — re-running the same rewrite converges, but readers in
-        the window can see a mixed state. A cross-partition-atomic
-        rewrite needs a table format with a transaction log (the Delta
-        path) or the full staging swap of overwrite_via_staging.
-
-        ``pre_swap`` (optional zero-arg callable) runs AFTER the
-        staging write succeeds and BEFORE any live directory is
-        replaced — the window where a version snapshot belongs:
-        a failed staging write (e.g. a CHECK guard firing) then
-        commits nothing, while the snapshot still captures the
-        pre-swap live state (update_where passes its checkpoint
-        here)."""
+        A blind write (no OCC token), staged then committed by
+        :meth:`_publish`: a failed staging write (e.g. a CHECK guard
+        firing) commits nothing; otherwise, under the publish lock,
+        the pre-state is retained as a hardlink snapshot (when
+        ``keep_versions > 0``), the staged leaves replace the live
+        ones, and one book update records the commit. Atomicity is
+        PER PARTITION (each swap is one directory rename): a crash
+        mid-loop leaves some partitions new and some old — re-running
+        the same rewrite converges, but readers in the window can see
+        a mixed state. A cross-partition-atomic rewrite needs a table
+        format with a transaction log (the Delta path) or the full
+        staging swap of overwrite_via_staging."""
         pcols = (
             [partition_col]
             if isinstance(partition_col, str)
             else list(partition_col)
         )
         _check_no_null_partition_values(pcols, values)
-        df = self._with_check_guards(df, full_name)
-        base = self.path(full_name)
-        staging = base + "__pstaging"
-        shutil.rmtree(staging, ignore_errors=True)
-        (
-            df.filter(partition_predicate(pcols, values))
-            .write.format(self.fmt)
-            .mode("overwrite")
-            .partitionBy(*pcols)
-            .save(staging)
+        staging = self._stage(
+            self._with_check_guards(df, full_name).filter(
+                partition_predicate(pcols, values)
+            ),
+            full_name, "__pstaging", pcols,
         )
-        # Swap in every LEAF partition directory the write produced
-        # (Spark owns the value→dirname encoding; a merge never
-        # empties a partition, so staging covers all touched values
-        # with rows). Intermediate levels are created, never replaced.
-        os.makedirs(base, exist_ok=True)
-
-        def _swap(src_dir: str, dst_dir: str, depth: int) -> None:
-            for entry in os.listdir(src_dir):
-                if not entry.startswith(f"{pcols[depth]}="):
-                    continue
-                s = os.path.join(src_dir, entry)
-                d = os.path.join(dst_dir, entry)
-                if depth == len(pcols) - 1:
-                    shutil.rmtree(d, ignore_errors=True)
-                    os.replace(s, d)
-                else:
-                    os.makedirs(d, exist_ok=True)
-                    _swap(s, d, depth + 1)
-
-        if pre_swap is not None:
-            pre_swap()
-        _swap(staging, base, 0)
-        shutil.rmtree(staging, ignore_errors=True)
-        self._invalidate(full_name)
+        # Every LEAF partition directory the write produced (Spark owns
+        # the value→dirname encoding; a merge never empties a
+        # partition, so staging covers all touched values with rows).
+        self._publish(
+            full_name, staging, leaves=_raw_leaf_dirs(staging, pcols)
+        )
 
     def restore(
         self,
@@ -2362,10 +2377,10 @@ class Catalog:
         metadata ops, not O(bytes), same economics as the rename-only
         snapshots. ``keep_versions`` pruning still applies — restoring
         retires the oldest snapshots beyond the retention bound — but
-        NEVER the restore source itself: if the source is the oldest
-        at capacity, it is re-pinned after the swap (hardlinks of the
-        just-restored live state, identical bytes), leaving
-        keep_versions+1 retained until the next snapshot event.
+        NEVER the restore source itself: the commit pins it, so a
+        source that is the oldest at capacity stays (its directory and
+        commit time untouched), leaving keep_versions+1 retained until
+        the next snapshot event. A blind write (no OCC token).
         """
         if (version is None) == (steps_back is None):
             raise ValueError("pass exactly one of version= / steps_back=")
@@ -2384,30 +2399,14 @@ class Catalog:
                     f"steps_back={steps_back} unavailable"
                 )
             label = vs[-steps_back]
-        src = os.path.join(self._version_root(full_name), label)
-        # Captured before pruning can retire src: if the re-pin path
-        # below recreates the snapshot, it must carry the ORIGINAL
-        # directory mtime, or history() timestamps go non-monotonic
-        # across versions (ADVICE r8).
-        src_stat = os.stat(src)
-        src_commit_time = self._snapshot_commit_time(full_name, label)
-        final = self.path(full_name)
-        staging = final + "__staging"
+        staging = self.path(full_name) + "__staging"
         shutil.rmtree(staging, ignore_errors=True)
-        shutil.copytree(src, staging, copy_function=os.link)
-        snap = self._snapshot_or_drop(full_name)
-        os.replace(staging, final)
-        if label not in self.versions(full_name):
-            # retention pruning retired the source while snapshotting
-            # the replaced state — re-pin it (hardlinks of the live
-            # state just restored from it: identical bytes) so the
-            # stays-addressable promise holds. Restore the source's
-            # original mtime so history() stays monotonic.
-            repinned = os.path.join(self._version_root(full_name), label)
-            shutil.copytree(final, repinned, copy_function=os.link)
-            os.utime(repinned, (src_stat.st_atime, src_stat.st_mtime))
-            snap[label] = src_commit_time
-        self._invalidate(full_name, snapshots=snap)
+        shutil.copytree(
+            os.path.join(self._version_root(full_name), label),
+            staging,
+            copy_function=os.link,
+        )
+        self._publish(full_name, staging, pin=label)
 
     def clone(
         self,
@@ -2468,13 +2467,10 @@ class Catalog:
             if not self.exists(src_name):
                 raise ValueError(f"clone source {src_name} does not exist")
             src = self.path(src_name)
-        dst = self.path(dst_name)
-        staging = dst + "__staging"
+        staging = self.path(dst_name) + "__staging"
         shutil.rmtree(staging, ignore_errors=True)
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
         copy_fn = os.link if shallow else shutil.copy2
         shutil.copytree(src, staging, copy_function=copy_fn)
-        os.replace(staging, dst)
         # a clone carries the source's definition (Delta clone copies
         # table metadata: constraints, generated columns, identity
         # WITH its high-water so ids minted on the clone continue past
@@ -2493,7 +2489,7 @@ class Catalog:
                 self._clustered_files_path(src_name),
                 self._clustered_files_path(dst_name),
             )
-        self._invalidate(dst_name)
+        self._publish(dst_name, staging)
 
     def vacuum(
         self,

@@ -539,18 +539,16 @@ def _commit_recluster(
     leaves only the __staging husk vacuum already reclaims — never a
     phantom catalog entry), HARDLINK the clean files alongside
     (O(#files) metadata ops, zero data bytes), and commit through the
-    same atomic snapshot + directory swap as every overwrite. The
-    clustered-file book is refreshed from the committed state."""
+    catalog's publish step like every overwrite (token check,
+    snapshot, directory swap, one book update). The clustered-file
+    book is refreshed from the committed state."""
     import shutil
 
-    from .catalog import ConcurrentWriteException
-
-    path = catalog.path(full_name)
     # OCC capture: the frames read the live files listed above —
     # another writer committing before our swap would be clobbered by
     # a "row-preserving" rewrite of rows that no longer exist
     expected = catalog.commit_token(full_name)
-    staging = path + "__staging"
+    staging = catalog.path(full_name) + "__staging"
     shutil.rmtree(staging, ignore_errors=True)
     os.makedirs(staging)
     written = 0
@@ -576,15 +574,7 @@ def _commit_recluster(
     except BaseException:
         shutil.rmtree(staging, ignore_errors=True)
         raise
-    with catalog._publish_lock(full_name):
-        try:
-            catalog._check_expected(full_name, expected)
-        except ConcurrentWriteException:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        snap = catalog._snapshot_or_drop(full_name)
-        os.replace(staging, path)
-        catalog._invalidate(full_name, snapshots=snap)
+    catalog._publish(full_name, staging, expected)
     catalog._mark_clustered_current(full_name)
     return written
 
@@ -668,11 +658,10 @@ def optimize_table(
     values only (metadata scale, no data scan; non-partition columns
     are refused by name), matching leaves are read, compacted or
     Z-ordered, and swapped through overwrite_partitions — untouched
-    leaves are never read and stay inode-identical on disk. The
-    pre-state is hardlink-snapshotted (``Catalog.snapshot``) between
-    the staging write and the swap, so a partition-scoped OPTIMIZE is
-    a version like any other write and a failed staging write commits
-    nothing (the same pre_swap ordering as UPDATE).
+    leaves are never read and stay inode-identical on disk. Its
+    commit retains the pre-state as a hardlink snapshot under the same
+    lock as the swap, so a partition-scoped OPTIMIZE is a version like
+    any other write and a failed staging write commits nothing.
 
     On a hive-partitioned table the layout is preserved (detected via
     detect_partition_cols); clustering is then global across the
@@ -828,14 +817,7 @@ def _optimize_partitions(
         out = _zorder_frame(part, zorder_by, bits, n_files)
     else:
         out = part.repartition(n_files)
-    catalog.overwrite_partitions(
-        out, full_name, pcols, touched,
-        pre_swap=(
-            (lambda: catalog.snapshot(full_name))
-            if catalog.keep_versions > 0
-            else None
-        ),
-    )
+    catalog.overwrite_partitions(out, full_name, pcols, touched)
     return n_files
 
 

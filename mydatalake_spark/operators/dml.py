@@ -19,10 +19,11 @@ Delta's implementation has:
   byte-identical on disk (hardlink snapshots keep sharing its inodes,
   so ``table_changes(partition_cols=...)`` can later PROVE those
   leaves unchanged without reading them).
-- **versioned**: the pre-state is retained (staging-swap snapshot on
-  the whole-table path, an explicit hardlink ``Catalog.snapshot`` on
-  the in-place partitioned path), so time travel, RESTORE, and the
-  change feed compose over a DELETE/UPDATE exactly as over a MERGE.
+- **versioned**: every statement commits through the catalog's one
+  publish step, which retains the pre-state (a renamed directory on
+  the whole-table path, a hardlink snapshot on the partitioned path),
+  so time travel, RESTORE, and the change feed compose over a
+  DELETE/UPDATE exactly as over a MERGE.
 
 SQL ternary semantics are honored: rows where the condition evaluates
 to NULL are NOT matched (kept by DELETE, left unmodified by UPDATE) —
@@ -38,7 +39,6 @@ split as merge_upsert vs merge_upsert_delta).
 
 from __future__ import annotations
 
-import os
 import shutil
 
 from pyspark.sql import Column, DataFrame
@@ -68,34 +68,6 @@ def _matched(condition) -> Column:
     NULL → not matched (ANSI DELETE/UPDATE ... WHERE)."""
     cond = F.expr(condition) if isinstance(condition, str) else condition
     return F.coalesce(cond, F.lit(False))
-
-
-def _raw_leaf_dirs(root: str, pcols: list[str]) -> set[str]:
-    """Relative paths of every hive-layout LEAF partition directory
-    under ``root``, in Spark's own dirname encoding (``date=2024-01-02/
-    region=EU``). Staying in dirname space is the point: comparing two
-    Spark-written trees never re-implements Spark's value→dirname
-    escaping (which _leaf_partition_files must unquote for predicate
-    values — here we need the opposite direction, so we never decode)."""
-    out: set[str] = set()
-
-    def walk(d: str, depth: int, rel: str) -> None:
-        if depth == len(pcols):
-            out.add(rel)
-            return
-        prefix = f"{pcols[depth]}="
-        if not os.path.isdir(d):
-            return
-        for entry in os.listdir(d):
-            if entry.startswith(prefix):
-                walk(
-                    os.path.join(d, entry),
-                    depth + 1,
-                    os.path.join(rel, entry) if rel else entry,
-                )
-
-    walk(root, 0, "")
-    return out
 
 
 def _probe_touched(
@@ -131,20 +103,6 @@ def _probe_touched(
     return touched, n_matched
 
 
-def _checkpoint_if_versioned(catalog, table: str, checkpoint: bool) -> None:
-    """Hardlink-snapshot the live state before an in-place partition
-    mutation, so the DML commits a version like every other write path
-    (O(#files) metadata — Catalog.snapshot).
-
-    ``checkpoint`` governs ONLY this in-place partitioned path: the
-    whole-table paths ride overwrite_via_staging, whose rename-on-
-    overwrite snapshot follows the catalog's keep_versions policy like
-    every other full overwrite — there is no opt-out there, by design
-    (both delete_where and update_where document this)."""
-    if checkpoint and catalog.keep_versions > 0:
-        catalog.snapshot(table)
-
-
 def _apply_sets(rows: DataFrame, set_exprs: dict, matched: Column) -> DataFrame:
     """Apply UPDATE SET semantics to a frame: matched rows get every
     SET expression (all evaluated against the PRE-update row — ANSI
@@ -178,13 +136,11 @@ def delete_where(
     condition,
     partition_cols: list[str] | None = None,
     max_partitions: int = 10_000,
-    checkpoint: bool = True,
 ) -> int:
     """``DELETE FROM table WHERE condition`` (Delta DML analogue),
-    copy-on-write. Returns the number of rows deleted. ``checkpoint``
-    applies to the partitioned in-place path only; the whole-table
-    path always versions per the catalog's ``keep_versions`` policy
-    (it rides the same staging-swap snapshot as every full overwrite).
+    copy-on-write. Returns the number of rows deleted. Both paths
+    commit through the catalog's one publish step, so each DELETE is
+    one version when the catalog's ``keep_versions`` is on.
 
     ``condition`` is a SQL expression string or a Column; NULL
     evaluations keep the row (ANSI WHERE semantics — unit-pinned).
@@ -202,13 +158,15 @@ def delete_where(
     layout): a bounded groupBy probe (ONE scan, pruned to the
     condition+partition columns) finds the touched leaves and the
     deleted-row count together; only those leaves are read (static
-    partition pruning via ``partition_predicate``) and swapped; a leaf
-    whose every row matched is REMOVED (directory and now-empty parent
-    levels) — the case ``overwrite_partitions`` by contract never
-    faces. Untouched leaves are never read and keep their inodes, so a
-    prior hardlink snapshot still proves them unchanged to the pruned
-    change feed. Emptying every remaining leaf is refused before any
-    mutation, same rationale as the whole-table refusal.
+    partition pruning via ``partition_predicate``) and staged, and the
+    catalog's leaf-swap commit replaces them under its publish lock —
+    a leaf whose every row matched is REMOVED (directory and now-empty
+    parent levels), the case ``overwrite_partitions`` by contract
+    never faces. The pre-state is a hardlink snapshot: untouched
+    leaves are never read and keep their inodes, so the pruned change
+    feed can prove them unchanged. Emptying every remaining leaf is
+    refused before any mutation, same rationale as the whole-table
+    refusal.
 
     At 100 TB: the probe is a partial-agg count per touched partition
     (driver transfer bounded by ``max_partitions``); the rewrite reads
@@ -242,64 +200,33 @@ def delete_where(
     if not touched:
         return 0
 
-    from ..catalog import partition_predicate
+    from ..catalog import _raw_leaf_dirs, partition_predicate
 
-    base = catalog.path(table)
-    staging = base + "__dmlstaging"
-    touchdir = base + "__dmltouched"
-    shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(touchdir, ignore_errors=True)
-    slice_pred = partition_predicate(pcols, touched)
-    (
-        df.where(slice_pred)
-        .where(~matched)
-        .write.format(catalog.fmt)
-        .mode("overwrite")
-        .partitionBy(*pcols)
-        .save(staging)
-    )
     # Render the touched VALUES through Spark's own value→dirname
     # encoding (a ≤max_partitions-row write) so emptied-leaf removal
     # happens purely in dirname space — never re-implementing hive
     # escaping for dates/strings/specials.
     spark = df.sparkSession
-    (
+    touchdir = catalog._stage(
         spark.createDataFrame(touched, schema=df.select(*pcols).schema)
-        .withColumn("__x__", F.lit(1))
-        .write.mode("overwrite")
-        .partitionBy(*pcols)
-        .save(touchdir)
+        .withColumn("__x__", F.lit(1)),
+        table, "__dmltouched", pcols,
     )
     touched_rel = _raw_leaf_dirs(touchdir, pcols)
+    shutil.rmtree(touchdir, ignore_errors=True)
+    staging = catalog._stage(
+        df.where(partition_predicate(pcols, touched)).where(~matched),
+        table, "__dmlstaging", pcols,
+    )
     staged_rel = _raw_leaf_dirs(staging, pcols)
     emptied_rel = touched_rel - staged_rel
-    live_rel = _raw_leaf_dirs(base, pcols)
-    if not (live_rel - emptied_rel):
+    if not (_raw_leaf_dirs(catalog.path(table), pcols) - emptied_rel):
         shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(touchdir, ignore_errors=True)
         raise ValueError(
             f"delete_where would empty every partition of {table}; "
             "use Catalog.truncate()."
         )
-    _checkpoint_if_versioned(catalog, table, checkpoint)
-    for rel in sorted(staged_rel):
-        dst = os.path.join(base, rel)
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        shutil.rmtree(dst, ignore_errors=True)
-        os.replace(os.path.join(staging, rel), dst)
-    for rel in sorted(emptied_rel):
-        shutil.rmtree(os.path.join(base, rel), ignore_errors=True)
-        # prune now-empty intermediate levels so a later leaf walk
-        # doesn't report a valueless directory husk
-        parent = os.path.dirname(os.path.join(base, rel))
-        while parent != base and os.path.isdir(parent) and not os.listdir(
-            parent
-        ):
-            os.rmdir(parent)
-            parent = os.path.dirname(parent)
-    shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(touchdir, ignore_errors=True)
-    catalog._invalidate(table)
+    catalog._publish(table, staging, leaves=staged_rel, emptied=emptied_rel)
     return n_deleted
 
 
@@ -310,13 +237,11 @@ def update_where(
     condition,
     partition_cols: list[str] | None = None,
     max_partitions: int = 10_000,
-    checkpoint: bool = True,
     allow_partition_move: bool = False,
 ) -> int:
     """``UPDATE table SET col = expr, ... WHERE condition`` (Delta DML
-    analogue), copy-on-write. Returns the number of rows updated.
-    ``checkpoint`` applies to the partitioned in-place path only (see
-    :func:`delete_where`).
+    analogue), copy-on-write. Returns the number of rows updated;
+    versioned like :func:`delete_where`.
 
     ``set_exprs`` maps EXISTING column names to SQL expression strings
     or Columns, all evaluated against the pre-update row (ANSI UPDATE:
@@ -334,9 +259,8 @@ def update_where(
     re-partitions by ``partition_cols``, so the layout survives the
     move — correct, just unpruned, the same plan Delta picks when
     files can't be skipped. Otherwise leaves are never emptied or
-    created and the rewrite delegates to ``overwrite_partitions``;
-    the pre-state is checkpointed via hardlink snapshot so the UPDATE
-    is a version like any other write.
+    created and the rewrite delegates to ``overwrite_partitions``,
+    whose commit retains the pre-state as a hardlink snapshot.
 
     Scale shape is identical to :func:`delete_where`: bounded probe,
     static pruning, touched-leaves-only rewrite, 0-match fast path.
@@ -420,13 +344,5 @@ def update_where(
             matched,
         )
     )
-    # Snapshot only once the updated slice has materialized in staging
-    # (pre_swap fires between overwrite_partitions' staging write and
-    # its directory swaps): a rewrite that FAILS — e.g. a CHECK guard
-    # raising mid-write — must not burn a keep_versions slot on a
-    # version identical to live. delete_where orders this the same way.
-    catalog.overwrite_partitions(
-        new_slice, table, pcols, touched,
-        pre_swap=lambda: _checkpoint_if_versioned(catalog, table, checkpoint),
-    )
+    catalog.overwrite_partitions(new_slice, table, pcols, touched)
     return n_updated

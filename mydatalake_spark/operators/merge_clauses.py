@@ -398,8 +398,8 @@ def merge_apply_partitioned(
     (LIMIT max+1 caps the driver transfer — merge_upsert_partitioned's
     contract), a partition-pruned read of only the touched leaves,
     ONE merge_apply join over that slice, and a leaf-directory swap
-    with the pre-state hardlink-snapshotted between staging write and
-    swap (failed staging commits nothing). A changeset touching 3 of
+    whose commit retains the pre-state as a hardlink snapshot (failed
+    staging commits nothing). A changeset touching 3 of
     3,000 partitions reads and rewrites ~0.1% of the table.
 
     ``touched_hint`` (r12, VERDICT #9): a caller that can derive the
@@ -494,12 +494,5 @@ def merge_apply_partitioned(
         target_slice, source, pairs,
         matched=matched, not_matched=not_matched,
     )
-    catalog.overwrite_partitions(
-        merged, table, pcols, touched,
-        pre_swap=(
-            (lambda: catalog.snapshot(table))
-            if catalog.keep_versions > 0
-            else None
-        ),
-    )
+    catalog.overwrite_partitions(merged, table, pcols, touched)
     return touched

@@ -459,18 +459,18 @@ def test_touched_partitions_probe_proves_untouched_leaves(spark, tmp_path):
         "k long, p string, v double, ts int",
     )
     merge_upsert_partitioned(cat, "g.s.t", chg, ["k", "p"], "p", "ts")
-    assert cat.snapshot("g.s.t") == 2
+    assert cat.snapshot("g.s.t") == 3
     vroot = cat._version_root("g.s.t")
     assert _touched_partitions(
         os.path.join(vroot, "v00000001"),
-        os.path.join(vroot, "v00000002"),
+        os.path.join(vroot, "v00000003"),
         ["p"],
     ) == [("2",)]
 
     pruned = cat.table_changes(
-        "g.s.t", ["k"], from_version=1, to_version=2, partition_cols=["p"]
+        "g.s.t", ["k"], from_version=1, to_version=3, partition_cols=["p"]
     )
-    full = cat.table_changes("g.s.t", ["k"], from_version=1, to_version=2)
+    full = cat.table_changes("g.s.t", ["k"], from_version=1, to_version=3)
     assert sorted(map(tuple, pruned.collect())) == sorted(
         map(tuple, full.collect())
     )
@@ -523,12 +523,12 @@ def test_catalog_snapshot_diff_prunes_and_matches_operator(spark, tmp_path):
     cat.snapshot("g.s.t")
 
     pruned = cat.snapshot_diff(
-        "g.s.t", ["k"], from_version=1, to_version=2,
+        "g.s.t", ["k"], from_version=1, to_version=3,
         partition_cols=["p"], include_new_values=True,
     )
     raw = snapshot_diff(
         cat.read_version("g.s.t", version=1),
-        cat.read_version("g.s.t", version=2),
+        cat.read_version("g.s.t", version=3),
         ["k"], include_new_values=True,
     )
     assert sorted(
@@ -543,8 +543,8 @@ def test_catalog_snapshot_diff_prunes_and_matches_operator(spark, tmp_path):
     pf = [l for l in plan.splitlines() if "PartitionFilters" in l]
     assert len(pf) == 2 and all("[]" not in l for l in pf), pf
     # live-state target works too
-    live = cat.snapshot_diff("g.s.t", ["k"], from_version=2)
-    assert live.count() == 0  # live == v2
+    live = cat.snapshot_diff("g.s.t", ["k"], from_version=3)
+    assert live.count() == 0  # live == v3
 
 
 def test_table_changes_timestamp_addressed(spark, tmp_path):

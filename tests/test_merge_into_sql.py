@@ -566,3 +566,29 @@ def test_merge_using_time_traveled_source(spark, tmp_path):
             f"MERGE INTO {TBL} AS t USING {SRC} VERSION AS OF x AS s "
             + stmt_tail,
         )
+
+
+@pytest.mark.parametrize("partitioned", [False, True])
+def test_every_dml_statement_commits_one_version(spark, tmp_path, partitioned):
+    """Versioning is the catalog's keep_versions alone: each MERGE
+    (canonical and clause form), DELETE and UPDATE retains exactly one
+    version, on the pruned partitioned paths as on whole-table ones."""
+    cat = Catalog(spark, str(tmp_path / "wh"), keep_versions=10)
+    _seed(spark, cat, partitioned=partitioned)
+    _changes(spark, cat)
+    on = "ON t.id = s.id AND t.region = s.region "
+    for sql in (
+        f"MERGE INTO {TBL} t USING {SRC} s {on}"
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
+        f"MERGE INTO {TBL} t USING {SRC} s {on}"
+        "WHEN MATCHED AND s.amount < 50 THEN UPDATE SET amount = s.amount * 2 "
+        "WHEN NOT MATCHED THEN INSERT *",
+        f"DELETE FROM {TBL} WHERE id = 2",
+        f"UPDATE {TBL} SET amount = amount + 1 WHERE id = 3",
+    ):
+        before = cat.versions(TBL)
+        run_table_sql(cat, sql)
+        after = cat.versions(TBL)
+        assert after[:-1] == before and len(after) == len(before) + 1, (
+            sql, before, after,
+        )

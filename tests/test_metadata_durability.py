@@ -5,6 +5,7 @@ rule, failed DDL must not half-apply, LIKE must carry the full
 declared surface, and the comment book must follow column DDL."""
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -519,3 +520,239 @@ def test_one_commit_writes_one_book_update(spark, tmp_path, monkeypatch):
     assert cat.versions(TBL) == ["v00000003", "v00000004"]
     assert cat.read_version(TBL, version=3).first().v == "c"
     assert cat.read(TBL).first().v == "e"
+    # every write mode: one commit, one book update
+    for mode, (seed, write, _rows_after) in sorted(WRITE_MODES.items()):
+        c = Catalog(spark, str(tmp_path / mode), keep_versions=2)
+        seed(c, spark)
+        calls = []
+        real = c._update_book
+
+        def counted(*a, _real=real, _calls=calls, **k):
+            _calls.append(a[0])
+            return _real(*a, **k)
+
+        c._update_book = counted
+        write(c, spark)
+        assert len(calls) == 1, (mode, calls)
+
+
+# --- one commit protocol: every write mode stages, then publishes ----
+
+PT = "silver.sales.p"
+SEED = {(1, "a", "x"), (2, "b", "x")}
+
+
+def _prows(spark, *rows):
+    return spark.createDataFrame(list(rows), "id int, p string, v string")
+
+
+def _pseed(cat, spark):
+    cat.overwrite(_prows(spark, *sorted(SEED)), PT, partition_by=["p"])
+
+
+def _restore_seed(cat, spark):
+    _pseed(cat, spark)
+    cat.overwrite(_prows(spark, (9, "c", "y")), PT, partition_by=["p"])
+
+
+def _merge_upsert(cat, spark):
+    from mydatalake_spark.operators.merge import merge_upsert_partitioned
+
+    merge_upsert_partitioned(
+        cat, PT, _prows(spark, (1, "a", "new")), ["id", "p"], "p"
+    )
+
+
+def _merge_clauses(cat, spark):
+    from mydatalake_spark.operators.merge_clauses import (
+        MatchedClause,
+        NotMatchedClause,
+        merge_apply_partitioned,
+    )
+
+    merge_apply_partitioned(
+        cat, PT, _prows(spark, (1, "a", "new")), ["id", "p"],
+        matched=[MatchedClause(sets={"v": "__s_v"})],
+        not_matched=[NotMatchedClause(insert_all=True)],
+    )
+
+
+def _delete(cat, spark):
+    from mydatalake_spark.operators.dml import delete_where
+
+    delete_where(cat, PT, "id = 1", partition_cols=["p"])
+
+
+def _update(cat, spark):
+    from mydatalake_spark.operators.dml import update_where
+
+    update_where(cat, PT, {"v": "'new'"}, "id = 1", partition_cols=["p"])
+
+
+def _optimize(cat, spark):
+    from mydatalake_spark.maintenance import optimize_table
+
+    optimize_table(cat, PT, where="p = 'a'")
+
+
+#: write mode → (seed, write, live rows after the write)
+WRITE_MODES = {
+    "overwrite": (
+        _pseed,
+        lambda cat, spark: cat.overwrite(
+            _prows(spark, (1, "a", "new")), PT, partition_by=["p"]
+        ),
+        {(1, "a", "new")},
+    ),
+    "overwrite_via_staging": (
+        _pseed,
+        lambda cat, spark: cat.overwrite_via_staging(
+            _prows(spark, (1, "a", "new")), PT, partition_by=["p"]
+        ),
+        {(1, "a", "new")},
+    ),
+    "append": (
+        _pseed,
+        lambda cat, spark: cat.append(_prows(spark, (3, "a", "new")), PT),
+        SEED | {(3, "a", "new")},
+    ),
+    "append_txn_create": (
+        lambda cat, spark: None,
+        lambda cat, spark: cat.append(
+            _prows(spark, (3, "a", "new")), PT, partition_by=["p"],
+            txn_id="t1",
+        ),
+        {(3, "a", "new")},
+    ),
+    "overwrite_partitions": (
+        _pseed,
+        lambda cat, spark: cat.overwrite_partitions(
+            _prows(spark, (1, "a", "new")), PT, "p", ["a"]
+        ),
+        {(1, "a", "new"), (2, "b", "x")},
+    ),
+    "merge_upsert_partitioned": (
+        _pseed, _merge_upsert, {(1, "a", "new"), (2, "b", "x")}
+    ),
+    "merge_apply_partitioned": (
+        _pseed, _merge_clauses, {(1, "a", "new"), (2, "b", "x")}
+    ),
+    "delete_where": (_pseed, _delete, {(2, "b", "x")}),
+    "update_where": (_pseed, _update, {(1, "a", "new"), (2, "b", "x")}),
+    "optimize_where": (_pseed, _optimize, SEED),
+    "restore": (_restore_seed, lambda cat, spark: cat.restore(PT, version=1), SEED),
+}
+
+
+def _live(cat):
+    if not cat.exists(PT):
+        return None
+    return {(r.id, r.p, r.v) for r in cat.read(PT).collect()}
+
+
+@pytest.mark.parametrize("mode", sorted(WRITE_MODES))
+def test_failed_write_leaves_table_and_versions(
+    spark, tmp_path, monkeypatch, mode
+):
+    """A data write that raises commits nothing: the old rows stay
+    readable and no version is retained for it."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    seed, write, _rows_after = WRITE_MODES[mode]
+    cat = Catalog(spark, str(tmp_path / "wh"), keep_versions=2)
+    seed(cat, spark)
+    before, versions = _live(cat), cat.versions(PT)
+
+    def fail(*_a, **_k):
+        raise OSError("write failed")
+
+    monkeypatch.setattr(DataFrameWriter, "save", fail)
+    monkeypatch.setattr(shutil, "copytree", fail)  # restore's link copy
+    with pytest.raises(OSError, match="write failed"):
+        write(cat, spark)
+    monkeypatch.undo()
+    assert _live(cat) == before
+    assert cat.versions(PT) == versions
+
+
+@pytest.mark.parametrize("mode", sorted(WRITE_MODES))
+def test_crash_before_book_update_keeps_swap_and_numbering(
+    spark, tmp_path, monkeypatch, mode
+):
+    """A crash between the swap and the book update: the new rows are
+    live, and the next commit numbers past the orphaned snapshot."""
+    seed, write, rows_after = WRITE_MODES[mode]
+    cat = Catalog(spark, str(tmp_path / "wh"), keep_versions=2)
+    seed(cat, spark)
+    top = int((cat.versions(PT) or ["v0"])[-1][1:])
+
+    def crash(*_a, **_k):
+        raise OSError("crash before the book update")
+
+    monkeypatch.setattr(cat, "_update_book", crash)
+    with pytest.raises(OSError, match="crash"):
+        write(cat, spark)
+    monkeypatch.undo()
+    assert _live(cat) == rows_after
+    orphan = int((cat.versions(PT) or ["v0"])[-1][1:])
+    assert orphan == (top if mode == "append_txn_create" else top + 1)
+    if mode == "append_txn_create":
+        # the replay finds the batch landed and records it, once
+        assert write(cat, spark) == 1
+        assert _live(cat) == rows_after
+    cat.overwrite_via_staging(_prows(spark, (7, "a", "z")), PT)
+    assert cat.versions(PT)[-1] == f"v{orphan + 1:08d}"
+
+
+@pytest.mark.parametrize("keep_versions", [0, 2])
+def test_overwrite_failing_or_self_reading_keeps_the_table(
+    spark, tmp_path, keep_versions
+):
+    """overwrite stages before it swaps: a row that raises mid-write
+    leaves the live table readable, and a plan that reads the table it
+    overwrites sees the old files."""
+    from pyspark.errors import SparkRuntimeException
+
+    cat = Catalog(spark, str(tmp_path / "wh"), keep_versions=keep_versions)
+    _pseed(cat, spark)
+    bad = _prows(spark, (1, "a", "new")).withColumn(
+        "v",
+        F.when(F.col("id") == 1, F.raise_error(F.lit("boom"))).otherwise(
+            F.col("v")
+        ),
+    )
+    with pytest.raises(SparkRuntimeException, match="boom"):
+        cat.overwrite(bad, PT, partition_by=["p"])
+    assert _live(cat) == SEED
+    assert cat.versions(PT) == []
+    cat.overwrite(cat.read(PT).filter("id = 2"), PT, partition_by=["p"])
+    assert _live(cat) == {(2, "b", "x")}
+    assert len(cat.versions(PT)) == min(keep_versions, 1)
+
+
+def test_publish_internals_are_called_only_inside_the_catalog():
+    """Every write commits through Catalog._publish; no other module
+    reaches into the lock, token, snapshot or book-update steps."""
+    import ast
+    import pathlib
+
+    import mydatalake_spark
+
+    internals = {
+        "_publish_lock",
+        "_check_expected",
+        "_snapshot_or_drop",
+        "_snapshot_live",
+        "_invalidate",
+    }
+    root = pathlib.Path(mydatalake_spark.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "catalog.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Attribute) and node.attr in internals:
+                offenders.append(
+                    f"{path.relative_to(root)}:{node.lineno} {node.attr}"
+                )
+    assert not offenders, offenders

@@ -1028,7 +1028,7 @@ def test_table_changes_partition_pruned_scans(spark, tmp_path):
     cat.snapshot("g.s.t")
 
     feed = cat.table_changes(
-        "g.s.t", ["k"], from_version=1, to_version=2, partition_cols=["p"]
+        "g.s.t", ["k"], from_version=2, to_version=3, partition_cols=["p"]
     )
     plan = _plan(spark, feed)
     pf = [l for l in plan.splitlines() if "PartitionFilters" in l]
@@ -1038,7 +1038,7 @@ def test_table_changes_partition_pruned_scans(spark, tmp_path):
             f"snapshot scan not partition-pruned: {line}"
         )
     # 1 touched leaf of 8 → each side reads exactly one partition
-    for side in ("v00000001", "v00000002"):
+    for side in ("v00000002", "v00000003"):
         n = [l for l in plan.splitlines() if side in l]
         assert n, f"plan lost the {side} scan"
     assert feed.count() == 2  # the k=3 update pre+post

@@ -283,6 +283,9 @@ def split_name(full_name: str) -> tuple[str, str, str]:
 #: to disable the check (single-writer maintenance internals).
 _AUTO_TOKEN = object()
 
+#: Sentinel: a book update that keeps the recorded schema as it is.
+_KEEP = object()
+
 
 class ConcurrentWriteException(RuntimeError):
     """Two writers raced a publish to the same table (Delta's
@@ -354,11 +357,72 @@ class Catalog:
         p = self.path(full_name)
         if not os.path.isdir(p):
             return False
-        # A parquet dir with only _SUCCESS markers is not a table.
-        return any(not f.startswith(".") and f != "_SUCCESS" for f in os.listdir(p))
+        # A parquet dir with only _SUCCESS markers is not a table,
+        # unless the catalog committed it: a 0-row partitioned write
+        # leaves no data file, only its schema in the book.
+        return any(
+            not f.startswith(".") and f != "_SUCCESS" for f in os.listdir(p)
+        ) or self._committed_schema(full_name) is not None
 
     def read(self, full_name: str) -> DataFrame:
-        return self.spark.read.format(self.fmt).load(self.path(full_name))
+        """The live table. A parquet table committed by this catalog
+        loads with the data-column schema its last commit recorded in
+        the book (:meth:`_committed_schema`), so no Spark job infers it
+        from a footer; partition columns are discovered from the
+        directory names as before, with the types Spark infers from
+        them. A table with no recorded schema (written before the
+        book carried one, or by a writer outside the catalog) and any
+        Delta table load as Spark infers them."""
+        return self._load(
+            self.path(full_name), self._committed_schema(full_name)
+        )
+
+    def _load(self, path: str, schema) -> DataFrame:
+        reader = self.spark.read.format(self.fmt)
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.load(path)
+
+    def _committed_schema(self, full_name: str, label: str | None = None):
+        """The data-column schema recorded for the live state (or the
+        retained version ``label``) as a ``StructType``, or None when
+        the book holds none or the record does not describe the
+        directory: each record carries the inode of the directory it
+        was committed for, so a directory replaced behind the book —
+        a crash between a swap and its book update, a writer outside
+        the catalog — is read by inference instead of through a stale
+        schema."""
+        from pyspark.sql.types import StructType
+
+        if self.fmt == "delta":  # the Delta log holds the schema
+            return None
+        c = self._book(full_name).get("commit", {})
+        if label is None:
+            rec, d = c.get("schema"), self.path(full_name)
+        else:
+            rec = c.get("version_schemas", {}).get(label)
+            d = os.path.join(self._version_root(full_name), label)
+        try:
+            if rec is None or os.stat(d).st_ino != rec["ino"]:
+                return None
+        except OSError:
+            return None
+        return StructType.fromJson(json.loads(rec["json"]))
+
+    @staticmethod
+    def _schema_record(path: str, schema) -> dict:
+        """Book record of a directory's data-column schema: the
+        ``StructType`` JSON of ``schema`` without the partition columns
+        the directory's hive layout holds — Spark discovers those, with
+        the types it infers from the directory names — and the
+        directory's inode. A partitioned directory with no leaf (a
+        0-row write) keeps the partition columns with their written
+        types."""
+        from pyspark.sql.types import StructType
+
+        pcols = set(detect_partition_cols(path) or ())
+        data = StructType([f for f in schema.fields if f.name not in pcols])
+        return {"ino": os.stat(path).st_ino, "json": data.json()}
 
     # -- time travel ---------------------------------------------------
 
@@ -376,8 +440,11 @@ class Catalog:
 
         - ``commit``: ``time`` (the live state's commit time), ``hwm``
           (highest version number ever assigned), ``snapshots``
-          (``{label: commit time}`` of retained versions) and
-          ``append_txns`` (``{txn id: rows}``);
+          (``{label: commit time}`` of retained versions),
+          ``append_txns`` (``{txn id: rows}``), ``schema`` (the live
+          state's data-column schema, see :meth:`_schema_record`) and
+          ``version_schemas`` (``{label: schema record}`` of retained
+          versions, each kept from the commit that wrote it);
         - ``definition``: what CREATE OR REPLACE discards — see
           :meth:`definition`.
 
@@ -517,6 +584,9 @@ class Catalog:
         snapshot time, never reused, and stay addressable until pruned
         by ``keep_versions`` (Delta's VACUUM analogue; a pruned
         version raises the same ValueError as an out-of-range one).
+
+        A version loads with the schema its commit recorded, like
+        :meth:`read`: the one it was written with, not the live one.
         """
         vs = self.versions(full_name)
         if version is not None:
@@ -534,8 +604,9 @@ class Catalog:
                     f"steps_back={steps_back} unavailable"
                 )
             label = vs[-steps_back]
-        return self.spark.read.format(self.fmt).load(
-            os.path.join(self._version_root(full_name), label)
+        return self._load(
+            os.path.join(self._version_root(full_name), label),
+            self._committed_schema(full_name, label),
         )
 
     def history(self, full_name: str) -> list[dict]:
@@ -1030,6 +1101,7 @@ class Catalog:
         staging: str,
         expected_token=False,
         *,
+        schema,
         leaves: set[str] | None = None,
         emptied: set[str] = frozenset(),
         files: bool = False,
@@ -1042,8 +1114,10 @@ class Catalog:
         ``staging`` and raises :class:`ConcurrentWriteException`),
         (2) retain the pre-state per ``keep_versions``, (3) swap,
         (4) make ONE book update (:meth:`_invalidate`, carrying an
-        append's ``txn``). The swap replaces the whole directory by
-        default (pre-state RENAMED aside; pruning keeps ``pin``,
+        append's ``txn`` and the committed ``schema``: the staged
+        rows' ``StructType``, or None when it is not known, so reads
+        infer it). The swap replaces the whole directory by default
+        (pre-state RENAMED aside; pruning keeps ``pin``,
         restore's source); with ``leaves`` (hive-relative paths under
         ``staging``) only those leaf directories, removing the
         ``emptied`` ones; with ``files`` it moves each staged data
@@ -1091,7 +1165,9 @@ class Catalog:
                         os.rmdir(parent)
                         parent = os.path.dirname(parent)
                 shutil.rmtree(staging, ignore_errors=True)
-            self._invalidate(full_name, snapshots=snap, txn=txn)
+            self._invalidate(
+                full_name, snapshots=snap, txn=txn, schema=schema
+            )
 
     def overwrite(
         self,
@@ -1219,7 +1295,9 @@ class Catalog:
                     fh.write(contents)
             if carry_markers:
                 self.carry_marker_files(full_name, staging)
-            self._publish(full_name, staging, expected_token)
+            self._publish(
+                full_name, staging, expected_token, schema=df.schema
+            )
         if self.declared_cluster_cols(full_name):
             # the whole table now carries the declared layout (the
             # clustering hook or a _preclustered caller produced it):
@@ -1523,6 +1601,7 @@ class Catalog:
                     fh.write(txn_id)
         self._publish(
             full_name, staging, expected_token, files=files,
+            schema=guarded.schema,
             txn=None if txn_id is None else (txn_id, n),
         )
         if txn_id is not None and not files:
@@ -2342,17 +2421,16 @@ class Catalog:
             else list(partition_col)
         )
         _check_no_null_partition_values(pcols, values)
-        staging = self._stage(
-            self._with_check_guards(df, full_name).filter(
-                partition_predicate(pcols, values)
-            ),
-            full_name, "__pstaging", pcols,
+        staged = self._with_check_guards(df, full_name).filter(
+            partition_predicate(pcols, values)
         )
+        staging = self._stage(staged, full_name, "__pstaging", pcols)
         # Every LEAF partition directory the write produced (Spark owns
         # the value→dirname encoding; a merge never empties a
         # partition, so staging covers all touched values with rows).
         self._publish(
-            full_name, staging, leaves=_raw_leaf_dirs(staging, pcols)
+            full_name, staging, leaves=_raw_leaf_dirs(staging, pcols),
+            schema=staged.schema,
         )
 
     def restore(
@@ -2406,7 +2484,10 @@ class Catalog:
             staging,
             copy_function=os.link,
         )
-        self._publish(full_name, staging, pin=label)
+        self._publish(
+            full_name, staging, pin=label,
+            schema=self._committed_schema(full_name, label),
+        )
 
     def clone(
         self,
@@ -2466,7 +2547,8 @@ class Catalog:
         else:
             if not self.exists(src_name):
                 raise ValueError(f"clone source {src_name} does not exist")
-            src = self.path(src_name)
+            src, label = self.path(src_name), None
+        schema = self._committed_schema(src_name, label)
         staging = self.path(dst_name) + "__staging"
         shutil.rmtree(staging, ignore_errors=True)
         copy_fn = os.link if shallow else shutil.copy2
@@ -2489,7 +2571,7 @@ class Catalog:
                 self._clustered_files_path(src_name),
                 self._clustered_files_path(dst_name),
             )
-        self._publish(dst_name, staging)
+        self._publish(dst_name, staging, schema=schema)
 
     def vacuum(
         self,
@@ -2732,6 +2814,7 @@ class Catalog:
         stamp: bool = True,
         snapshots: dict | None = None,
         txn: tuple[str, int] | None = None,
+        schema=_KEEP,
     ) -> None:
         """Drop cached file listings for a rewritten path — Spark's
         shared FileStatusCache otherwise serves stale part-file lists
@@ -2741,10 +2824,14 @@ class Catalog:
         (stamped here — including the partitioned appends and leaf
         swaps that never touch the root dir mtime, ADVICE r11), the
         ``{label: commit time}`` snapshots it put aside (which also
-        raise the version high-water) and its append ``txn`` as
-        ``(id, rows)``. A crash before this update leaves the data
-        swapped and the snapshot directory in place: reads see the new
-        rows and :meth:`_next_version` numbers past the directory.
+        raise the version high-water, and keep the schema the
+        put-aside state was committed with), its append ``txn`` as
+        ``(id, rows)`` and the committed ``schema`` (a ``StructType``;
+        None forgets the recorded one; by default it stays). A crash
+        before this update leaves the data swapped and the snapshot
+        directory in place: reads see the new rows (by inference, as
+        the recorded schema names the old directory) and
+        :meth:`_next_version` numbers past the directory.
 
         ``stamp=False`` is for operations that change WHERE the bytes
         live but not WHEN they were committed (RENAME, snapshot()):
@@ -2754,13 +2841,28 @@ class Catalog:
         retained snapshot instead of the live state (ADVICE r12)."""
         import time
 
-        self.spark.catalog.refreshByPath(self.path(full_name))
-        stamp = stamp and os.path.isdir(self.path(full_name))
-        if not (stamp or snapshots or txn):
+        path = self.path(full_name)
+        self.spark.catalog.refreshByPath(path)
+        stamp = stamp and os.path.isdir(path)
+        if not (stamp or snapshots or txn or schema is not _KEEP):
             return
         if stamp:
             now = self.clock() if self.clock is not None else time.time()
         live = set(self.versions(full_name)) if snapshots else set()
+        if schema is not _KEEP and schema is not None:
+            schema = self._schema_record(path, schema)
+        kept = {}
+        if snapshots:
+            # a put-aside state keeps the live record if it was the
+            # live directory's: renamed aside whole, or hardlinked from
+            # the live directory that a leaf or file swap keeps
+            rec = self._book(full_name).get("commit", {}).get("schema")
+            inos = {os.stat(path).st_ino} if os.path.isdir(path) else set()
+            for label in snapshots:
+                d = os.path.join(self._version_root(full_name), label)
+                ino = os.stat(d).st_ino if os.path.isdir(d) else None
+                if rec and ino is not None and rec["ino"] in inos | {ino}:
+                    kept[label] = {**rec, "ino": ino}
 
         def edit(book):
             c = book.setdefault("commit", {})
@@ -2774,6 +2876,14 @@ class Catalog:
                 c["snapshots"] = {
                     k: v for k, v in merged.items() if k in live
                 }
+                merged = {**c.get("version_schemas", {}), **kept}
+                c["version_schemas"] = {
+                    k: v for k, v in merged.items() if k in live
+                }
+            if schema is None:
+                c.pop("schema", None)
+            elif schema is not _KEEP:
+                c["schema"] = schema
             if txn:
                 c.setdefault("append_txns", {})[txn[0]] = txn[1]
 

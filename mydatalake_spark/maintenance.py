@@ -574,7 +574,9 @@ def _commit_recluster(
     except BaseException:
         shutil.rmtree(staging, ignore_errors=True)
         raise
-    catalog._publish(full_name, staging, expected)
+    catalog._publish(
+        full_name, staging, expected, schema=catalog.read(full_name).schema
+    )
     catalog._mark_clustered_current(full_name)
     return written
 

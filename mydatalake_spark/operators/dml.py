@@ -214,10 +214,8 @@ def delete_where(
     )
     touched_rel = _raw_leaf_dirs(touchdir, pcols)
     shutil.rmtree(touchdir, ignore_errors=True)
-    staging = catalog._stage(
-        df.where(partition_predicate(pcols, touched)).where(~matched),
-        table, "__dmlstaging", pcols,
-    )
+    kept = df.where(partition_predicate(pcols, touched)).where(~matched)
+    staging = catalog._stage(kept, table, "__dmlstaging", pcols)
     staged_rel = _raw_leaf_dirs(staging, pcols)
     emptied_rel = touched_rel - staged_rel
     if not (_raw_leaf_dirs(catalog.path(table), pcols) - emptied_rel):
@@ -226,7 +224,10 @@ def delete_where(
             f"delete_where would empty every partition of {table}; "
             "use Catalog.truncate()."
         )
-    catalog._publish(table, staging, leaves=staged_rel, emptied=emptied_rel)
+    catalog._publish(
+        table, staging, leaves=staged_rel, emptied=emptied_rel,
+        schema=kept.schema,
+    )
     return n_deleted
 
 

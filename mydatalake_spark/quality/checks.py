@@ -51,7 +51,7 @@ from __future__ import annotations
 import re
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 DEFAULT_MISSING_SENTINELS = ["", "0.0"]
@@ -232,6 +232,7 @@ def annotate(
     use_hashed_key: bool = False,
     fk_parents: dict[str, DataFrame] | None = None,
     keep_key_cols: bool = False,
+    observation: Observation | None = None,
 ) -> DataFrame:
     """Compile every declared test into ONE pass over ``df``.
 
@@ -249,6 +250,14 @@ def annotate(
     collision-free — '_'-joining both skips nulls and admits separator
     injection (('a_b','c') == ('a','b_c')) — so identity joins must
     use the raw columns null-safely, never the string.
+
+    ``observation``: observed on the wide frame (one row per record,
+    after the ``duplicated`` windows, before the explode), so the first
+    action over the result — the results write — also yields ``rows``
+    (the record count), ``run_date`` and one ``failed_{i}`` count of
+    failed records per test ``i`` of ``column_tests`` (a null flag
+    counts as passed, as in ``check_result``). Without one the plan is
+    unchanged.
     """
     if not key_cols:
         raise ValueError("No key column found in schema.")
@@ -369,6 +378,14 @@ def annotate(
     run_date_col = (
         F.current_date() if run_date is None else F.to_date(F.lit(run_date))
     )
+    if observation is not None:
+        keyed = keyed.observe(
+            observation,
+            F.count(F.lit(1)).alias("rows"),
+            F.max(run_date_col).alias("run_date"),
+            *[F.count_if(F.col(c)).alias(f"failed_{i}")
+              for i, c in enumerate(flag_cols)],
+        )
     key_carry = (
         [F.col(c).alias(f"__k_{c}__") for c in key_cols]
         if keep_key_cols else []

@@ -364,3 +364,93 @@ def test_runner_run_of_empty_tables_rolls_up_nothing(spark, prices, tmp_path):
         agg = runner.execute([check])
         assert agg.count() == 0
         assert "total_score" in agg.columns
+
+
+def test_runner_never_reads_the_results_table_back(
+    spark, prices, tmp_path, monkeypatch
+):
+    """The rollup comes from the counts observed on the results write:
+    a run loads the history table it upserts, never the results table
+    it just wrote."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    runner = CheckRunner(spark, cat, run_date=AS_OF, as_of=AS_OF)
+    check = TableCheck(df=prices, meta=parse_table_meta(PRICES_META))
+    loaded = []
+    real_load = DataFrameReader.load
+
+    def load(self, path=None, *a, **k):
+        loaded.append(path)
+        return real_load(self, path, *a, **k)
+
+    monkeypatch.setattr(DataFrameReader, "load", load)
+    for _ in range(2):
+        runner.execute([check])
+    monkeypatch.undo()
+    assert cat.path(runner.results_table) not in loaded
+    assert cat.path(runner.history_table) in loaded
+
+
+def test_history_upsert_does_not_shuffle_the_history(
+    spark, prices, tmp_path, monkeypatch
+):
+    """The history write's plan has no exchange but the rollup's
+    broadcast: the history side is read and written without a
+    shuffle."""
+    import re
+
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    runner = CheckRunner(spark, cat, run_date=AS_OF, as_of=AS_OF)
+    check = TableCheck(df=prices, meta=parse_table_meta(PRICES_META))
+    runner.execute([check])
+    plans = []
+    real = cat.overwrite_via_staging
+
+    def capture(df, full_name, *a, **k):
+        if full_name == runner.history_table:
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(df, full_name, *a, **k)
+
+    monkeypatch.setattr(cat, "overwrite_via_staging", capture)
+    runner.execute([TableCheck(df=prices, meta=parse_table_meta(PRICES_META),
+                               layer="gold")])
+    (plan,) = plans
+    assert set(re.findall(r"(\w*)Exchange\b", plan)) == {"Broadcast"}
+    hist = cat.read(runner.history_table)
+    assert hist.count() == 2 * hist.where("layer = 'gold'").count()
+
+
+def test_rerun_on_the_same_run_date_replaces_its_history_rows(
+    spark, prices, tmp_path
+):
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    runner = CheckRunner(spark, cat, run_date=AS_OF, as_of=AS_OF)
+    meta = parse_table_meta(PRICES_META)
+    first = runner.execute([TableCheck(df=prices, meta=meta)]).collect()
+    fixed = prices.where(F.col("symbol").isNotNull())
+    second = runner.execute([TableCheck(df=fixed, meta=meta)]).collect()
+    hist = cat.read(runner.history_table).collect()
+    assert len(hist) == len(first) == len(second)
+    assert sorted(hist, key=repr) == sorted(second, key=repr)
+    assert sorted(second, key=repr) != sorted(first, key=repr)
+
+
+def test_rollup_of_the_saved_results_equals_the_observed_rollup(
+    spark, prices, tmp_path
+):
+    """The rollup a Delta catalog's run groups from the saved results
+    table (it attaches no observations) equals the observed one, types
+    included."""
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    runner = CheckRunner(spark, cat, run_date=AS_OF, as_of=AS_OF)
+    meta = parse_table_meta(PRICES_META)
+    meta.columns[4].mandate = None
+    checks = [TableCheck(df=prices, meta=meta),
+              TableCheck(df=prices.limit(3), meta=meta, layer="gold")]
+    observed = runner.execute(checks)
+    saved = runner.aggregate_results(checks, None)
+    assert saved.dtypes == observed.dtypes
+    assert sorted(saved.collect(), key=repr) == sorted(
+        observed.collect(), key=repr
+    )

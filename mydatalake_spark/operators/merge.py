@@ -15,18 +15,20 @@ Two deliberate corrections (SURVEY.md §7.4(2)):
    pre-dedup the source on the keys (latest-wins) so the merge is
    deterministic for any input.
 
-Implementation is a pure DataFrame rewrite (delta-spark is not
-installed — SURVEY.md §7.4(3)):
-
-    result = (target ⟕ source-latest on keys, keep newer)
-             ∪ (source-latest ▷ target on keys)   -- new keys
-
-expressed as one full-outer join. Scale notes (100 TB): the join
-shuffles both sides by key — exactly what Delta MERGE does internally
-(its find-touched-files join). With AQE on, a small changeset side is
-broadcast automatically, which is the common CDC case (daily delta ≪
-accumulated table). For partitioned tables, pass
-``partition_pruning_col`` so unchanged partitions are never rewritten.
+Implementation (delta-spark is not installed — SURVEY.md §7.4(3)):
+``merge_upsert`` is a clause set of the one MERGE engine,
+operators/merge_clauses.py ``_merge`` — ``UPDATE SET * WHEN <ts
+guard>`` + ``INSERT *`` (+ BY SOURCE DELETE for full sync) over the
+latest-wins deduped source, as one full-outer join. The dedup makes
+the source keys unique, so unlike ``merge_apply`` it never runs the
+duplicate-key probe: building the plan runs no Spark job. Scale
+notes (100 TB): the join shuffles both sides by key — exactly what
+Delta MERGE does internally (its find-touched-files join). With AQE
+on, a small changeset side is broadcast automatically, which is the
+common CDC case (daily delta ≪ accumulated table). For partitioned
+tables, ``merge_upsert_partitioned`` runs the same merge through the
+shared partition-scoped driver, so unchanged partitions are never
+rewritten.
 """
 
 from __future__ import annotations
@@ -35,6 +37,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import dedup_latest
+from .merge_clauses import (
+    MatchedClause,
+    NotMatchedBySourceClause,
+    NotMatchedClause,
+    _evolve,
+    _merge,
+    _merge_partitions,
+    _require_same_columns,
+    _ts_guard,
+)
 
 
 def _dedup_source(
@@ -52,12 +64,19 @@ def _dedup_source(
     rows differing only by a null shift ((null,'x') vs ('x',null))
     would share a tiebreaker and the tie would fall back to partition
     order — exactly the nondeterminism the tiebreaker exists to
-    remove."""
+    remove. A real ``__tb__`` column would be consumed by that
+    synthesized tiebreaker, so it is refused."""
+    cols = source.columns
+    if "__tb__" in cols:
+        raise ValueError(
+            "merge: column '__tb__' collides with the reserved "
+            "tiebreaker staging name; rename it before merging."
+        )
     if ts_col is None:
         return source.dropDuplicates(keys)
     if tiebreakers:
         return dedup_latest(source, keys, [ts_col], tiebreakers)
-    non_key = [c for c in source.columns if c not in keys]
+    non_key = [c for c in cols if c not in keys]
     return (
         source.withColumn(
             "__tb__", F.xxhash64(_composite_key(non_key))
@@ -65,30 +84,6 @@ def _dedup_source(
         .transform(lambda d: dedup_latest(d, keys, [ts_col], ["__tb__"]))
         .drop("__tb__")
     )
-
-
-def _evolve_and_check(
-    target: DataFrame, source: DataFrame, evolve_schema: bool
-) -> DataFrame:
-    """Shared merge preamble: apply additive schema evolution (source
-    columns the target lacks are appended as typed nulls — the Delta
-    ``mergeSchema`` analogue), then enforce identical column sets.
-    Both merge entry points use this so their evolution semantics and
-    error contract cannot drift apart."""
-    if evolve_schema:
-        extra = [
-            f for f in source.schema.fields if f.name not in target.columns
-        ]
-        for f in extra:
-            target = target.withColumn(
-                f.name, F.lit(None).cast(f.dataType)
-            )
-    if set(target.columns) != set(source.columns):
-        raise ValueError(
-            "merge requires identical columns; "
-            f"target={target.columns} source={source.columns}"
-        )
-    return target
 
 
 def merge_upsert(
@@ -134,71 +129,17 @@ def merge_upsert(
     updated rows. Returns the merged DataFrame; callers persist it via
     Catalog.overwrite (or partition-scoped overwrite at scale).
     """
-    target = _evolve_and_check(target, source, evolve_schema)
-    cols = target.columns
-    # Reserved staging names: presence markers, the synthesized
-    # tiebreaker, and the "__s_" rename prefix (a real target column
-    # "__s_x" would collide with the renamed source "x" in the joined
-    # frame). A real column by any of these names would be silently
-    # overwritten — fail fast instead (same contract as
-    # merge_upsert_bloomed's __mk__/__bf__ guard).
-    reserved = {"__t_present__", "__s_present__", "__tb__"}
-    clash = sorted(
-        c for c in cols if c in reserved or c.startswith("__s_")
-    )
-    if clash:
-        raise ValueError(
-            f"merge_upsert: column(s) {clash} collide with reserved "
-            "staging names (__t_present__/__s_present__/__tb__/"
-            "'__s_' prefix); rename them before merging."
-        )
     source = _dedup_source(source, keys, ts_col, tiebreakers)
-
-    # Source columns are renamed (prefixed) before the join so every
-    # reference below is by unique name — immune to the ambiguous-
-    # column trap when target and source share lineage (e.g. both
-    # derived from the same table). Presence is tracked with marker
-    # columns: after the full-outer join the marker is null on the
-    # side that had no matching key (null-safe join keys make key-null
-    # checks unreliable for presence).
-    t = target.withColumn("__t_present__", F.lit(True))
-    s = source.select(
-        *[F.col(c).alias(f"__s_{c}") for c in cols]
-    ).withColumn("__s_present__", F.lit(True))
-
-    cond = None
-    for k in keys:
-        c = F.col(k).eqNullSafe(F.col(f"__s_{k}"))
-        cond = c if cond is None else (cond & c)
-    joined = t.join(s, cond, "full_outer")
-
-    t_here = F.col("__t_present__").isNotNull()
-    s_here = F.col("__s_present__").isNotNull()
-    if ts_col is not None:
-        # Null ts ≡ -infinity on BOTH sides (see docstring): expressed
-        # with when/otherwise so three-valued null comparisons can't
-        # leak through.
-        s_ts, t_ts = F.col(f"__s_{ts_col}"), F.col(ts_col)
-        ts_ge = (
-            F.when(s_ts.isNull() & t_ts.isNull(), F.lit(True))
-            .when(s_ts.isNull(), F.lit(False))
-            .when(t_ts.isNull(), F.lit(True))
-            .otherwise(s_ts >= t_ts)
-        )
-        source_wins = s_here & (~t_here | ts_ge)
-    else:
-        source_wins = s_here
-
-    if delete_missing:
-        # full-sync: a target row whose key the source no longer has
-        # is deleted (filter before the projection — the source-side
-        # marker is the presence signal)
-        joined = joined.filter(s_here)
-    picked = [
-        F.when(source_wins, F.col(f"__s_{c}")).otherwise(F.col(c)).alias(c)
-        for c in cols
-    ]
-    return joined.select(*picked)
+    guard = None if ts_col is None else _ts_guard(ts_col, ts_col)
+    return _merge(
+        target, source, keys,
+        matched=[MatchedClause(condition=guard, update_all=True)],
+        not_matched=[NotMatchedClause(insert_all=True)],
+        not_matched_by_source=(
+            [NotMatchedBySourceClause(sets=None)] if delete_missing else None
+        ),
+        evolve_schema=evolve_schema,
+    )
 
 
 def _composite_key(keys: list[str]) -> Column:
@@ -287,8 +228,13 @@ def merge_upsert_bloomed(
     )
 
     # evolve BEFORE the split so the bypass branch carries the new
-    # columns too (same additive-only rule as merge_upsert)
-    target = _evolve_and_check(target, source, evolve_schema)
+    # columns too (same additive-only rule as merge_upsert), and
+    # refuse a column mismatch before the changeset is cached
+    if evolve_schema:
+        target = _evolve(target, source)
+    _require_same_columns(
+        target.columns, source.columns, "merge_upsert_bloomed"
+    )
     # a derived changeset (the build side here) is referenced by the
     # sizing probe, the mask collect, AND the final merge join —
     # materialize it once; scan-shaped changesets stay uncached
@@ -300,9 +246,8 @@ def merge_upsert_bloomed(
     # the split stages the composite key as __mk__ and _folded_filter
     # stages the word list as __bf__; a real column by either name
     # would be silently clobbered and dropped from the merged output —
-    # fail fast instead (merge_upsert guards its own staging names —
-    # __t_present__/__s_present__/__tb__/the "__s_" prefix — the same
-    # way).
+    # fail fast instead (the merge core and _dedup_source guard their
+    # own staging names the same way).
     reserved = {"__mk__", "__bf__"}
     clash = reserved & (set(target.columns) | set(source.columns))
     if clash:
@@ -406,15 +351,6 @@ def merge_upsert_delta(
 
         delta_table = DeltaTable.forPath(spark, target_path)
 
-    if "__tb__" in source.columns:
-        # same staging-name contract as merge_upsert: _dedup_source
-        # synthesizes (and then drops) __tb__, which would silently
-        # consume a real column by that name
-        raise ValueError(
-            "merge_upsert_delta: column '__tb__' collides with the "
-            "reserved tiebreaker staging name; rename it before "
-            "merging."
-        )
     src = _dedup_source(source, keys, ts_col, tiebreakers)
     dt = delta_table
     on = " AND ".join(f"t.{k} <=> s.{k}" for k in keys)
@@ -477,34 +413,19 @@ def merge_upsert_partitioned(
     (same reason: a key's row must not move between partitions), the
     touched set is the distinct TUPLES, and pruning applies at every
     directory level — an untouched (date, region) leaf under a touched
-    date is never read or rewritten. Steps:
-
-    1. collect the DISTINCT partition values/tuples present in the
-       source — a tiny driver-side list (one shuffle over source only);
-    2. read ONLY those partitions of the target (partition pruning —
-       the unchanged 99% of the table is never scanned);
-    3. join-merge within that slice;
-    4. rewrite only those leaf partition directories.
-
-    ``max_partitions`` bounds step 1: the distinct-partition list is
-    collected to the driver, which is only safe for genuinely coarse
-    partition columns (dates, regions). A mistaken high-cardinality
-    column (an id, a timestamp) would otherwise OOM the driver —
-    instead we count first (cheap partial-agg count-distinct) and fail
-    fast with a clear error.
-
-    NULL partition values in the source fail fast (ADVICE r8): the
-    membership predicates (`IN`, `=`) never match NULL, so those
-    changeset rows would otherwise silently vanish from the merge.
+    date is never read or rewritten. The shared driver
+    (merge_clauses ``_merge_partitions``) probes the changeset's
+    distinct partition values/tuples (bounded by ``max_partitions``:
+    a mistaken high-cardinality column fails fast instead of shipping
+    a corpus-sized list to the driver; NULL partition values fail
+    fast too, since ``IN``/``=`` never match them), reads ONLY those
+    partitions of the target, merges that slice, and rewrites only
+    those leaf directories. A table that does not exist yet is created
+    from the source.
 
     Returns the list of touched partition values (tuples when
     ``partition_col`` is a list).
     """
-    from ..catalog import (
-        _check_no_null_partition_values,
-        partition_predicate,
-    )
-
     pcols = (
         [partition_col]
         if isinstance(partition_col, str)
@@ -517,40 +438,18 @@ def merge_upsert_partitioned(
             f"be part of the merge keys; got partition_col={pcols!r} "
             f"keys={keys} (not keys: {missing})"
         )
-    distinct_parts = source.select(*pcols).distinct()
-    # LIMIT max+1 bounds BOTH the count and the driver transfer: if the
-    # column is high-cardinality we learn "too many" after shipping at
-    # most max_partitions+1 values, never the full list.
-    probe = distinct_parts.limit(max_partitions + 1).collect()
-    if len(probe) > max_partitions:
-        raise ValueError(
-            f"merge_upsert_partitioned: source has more than "
-            f"{max_partitions} distinct values of {pcols!r}; "
-            "this looks like a non-partition (high-cardinality) column. "
-            "Pick a coarse partition column or raise max_partitions."
-        )
-    touched = [r[0] if len(pcols) == 1 else tuple(r) for r in probe]
-    _check_no_null_partition_values(pcols, touched)
-    if not touched:
-        return []
-    if not catalog.exists(table):
-        catalog.overwrite(source, table, partition_by=pcols)
-        return touched
-    target_slice = catalog.read(table).filter(
-        partition_predicate(pcols, touched)
-    )
-    src = source.select(*target_slice.columns)
-    if bloom:
-        merged = merge_upsert_bloomed(
-            target_slice, src, keys, ts_col, tiebreakers,
-            m_bits=bloom_m_bits, k=bloom_k, family=bloom_family,
-        )
-    else:
-        merged = merge_upsert(target_slice, src, keys, ts_col, tiebreakers)
-    catalog.overwrite_partitions(merged, table, pcols, touched)
-    # the write consumed the plan; free any derived-changeset cache
-    # merge_upsert_bloomed adopted onto it
-    from .. import caching
 
-    caching.release(merged)
-    return touched
+    def merge_slice(target_slice: DataFrame) -> DataFrame:
+        src = source.select(*target_slice.columns)
+        if bloom:
+            return merge_upsert_bloomed(
+                target_slice, src, keys, ts_col, tiebreakers,
+                m_bits=bloom_m_bits, k=bloom_k, family=bloom_family,
+            )
+        return merge_upsert(target_slice, src, keys, ts_col, tiebreakers)
+
+    touched = _merge_partitions(
+        catalog, table, source, pcols, merge_slice, max_partitions,
+        bootstrap=True,
+    )
+    return [t[0] for t in touched] if len(pcols) == 1 else touched

@@ -50,9 +50,10 @@ implementations —
     MERGE [WITH SCHEMA EVOLUTION] INTO t USING s ON ...
         WHEN [NOT] MATCHED [BY SOURCE] [AND c]
         THEN UPDATE SET */sets
-           | DELETE | INSERT ... → operators/merge.py (canonical
-        upsert shape, partition-pruned when the layout allows) or
-        operators/merge_clauses.py:merge_apply (general clause sets)
+           | DELETE | INSERT ... → operators/merge_clauses.py, the one
+        merge core (partition-pruned when the layout allows); the
+        canonical upsert shape dedups the source latest-wins, every
+        other clause set refuses duplicate source keys
 
 so a user migrating the reference's notebooks keeps their statements.
 Like plans/qualify.py this is a *string-level* adapter, not a SQL
@@ -1606,14 +1607,11 @@ def run_table_sql(catalog, sql: str, max_partitions: int = 10_000):
         #   WHEN MATCHED [AND c] THEN UPDATE SET */sets | DELETE
         #   WHEN NOT MATCHED [BY TARGET] [AND c] THEN INSERT */(cols) VALUES (..)
         #   WHEN NOT MATCHED BY SOURCE [AND c] THEN UPDATE SET sets | DELETE
-        # Strategy auto-pick: the canonical upsert shape (UPDATE SET *
-        # + INSERT *, no DELETEs) dispatches onto merge_upsert /
-        # merge_upsert_partitioned (partition-pruned when the detected
-        # hive layout's columns are all merge keys); every other
-        # clause set runs the generalized one-join merge_apply with a
-        # layout-preserving staging overwrite. Returns None (like
-        # INSERT OVERWRITE; Delta's MERGE metrics would cost a second
-        # pass over the join here).
+        # Every clause set runs the one merge core: leaf-scoped
+        # through the shared partition driver when the layout allows
+        # it, else a layout-preserving staging overwrite. Returns None
+        # (like INSERT OVERWRITE; Delta's MERGE metrics would cost a
+        # second pass over the join here).
         into_idx = 1
         evolve = False
         if [t[0] for t in toks[1:4]] == ["WITH", "SCHEMA", "EVOLUTION"]:
@@ -1706,13 +1704,22 @@ def run_table_sql(catalog, sql: str, max_partitions: int = 10_000):
                     "list (inserted rows' NULL slots are engine-"
                     "filled above the high-water mark)"
                 )
-        guard_expr = (
-            f"{_SOURCE_PREFIX}{guard[0]} {guard[1]} {guard[2]}"
-            if guard
-            else None
+        from pyspark.sql import functions as F
+
+        from ..operators.merge import _dedup_source
+        from ..operators.merge_clauses import (
+            _merge,
+            _merge_partitions,
+            _prune_refusal,
+            _ts_guard,
+            merge_apply,
         )
 
-        keys = [p[0] for p in pairs]
+        # The canonical upsert shape (UPDATE SET * + INSERT *, no BY
+        # SOURCE, at most a `>=` guard on one column) only changes the
+        # source rule: a latest-wins dedup (the reference's CDC
+        # upsert) instead of the duplicate-key refusal, so it never
+        # runs merge_apply's probe job.
         canonical = (
             len(matched) == 1
             and matched[0].update_all
@@ -1727,72 +1734,41 @@ def run_table_sql(catalog, sql: str, max_partitions: int = 10_000):
                 or (guard[0] == guard[2] and guard[1] == ">=")
             )
         )
+        if guard is not None:
+            # the ON timestamp guard gates every MATCHED clause, with
+            # null ts ≡ -infinity on both sides (fixed reference
+            # semantics: stale source rows keep the target row, they
+            # are NOT re-inserted)
+            g = _ts_guard(guard[0], guard[2], guard[1])
+            for m in matched:
+                m.condition = (
+                    g if m.condition is None else g & F.expr(m.condition)
+                )
+        merge = merge_apply
+        if canonical:
+            source = _dedup_source(
+                source, [tc for tc, _ in pairs],
+                guard[0] if guard else None, None,
+            )
+            merge = _merge
         pcols = _detect_partition_cols(catalog.path(table))
         # schema evolution that actually ADDS columns touches every
-        # row of the table — the pruned paths cannot express it, so
-        # those statements take the whole-table rewrite
+        # row of the table — the pruned path cannot express it, so
+        # those statements take the whole-table rewrite. Otherwise a
+        # clause set is leaf-scoped when the layout allows it (see
+        # _prune_refusal: partition cols are same-named merge keys, no
+        # DELETE, no SET on a partition column, every insert lands in
+        # its source row's partition) and it has no BY SOURCE clause
+        # (that touches every leaf).
         evolving = evolve and bool(
             set(source.columns) - set(catalog.read(table).columns)
         )
-        if canonical:
-            from ..operators.merge import (
-                merge_upsert,
-                merge_upsert_partitioned,
-            )
-
-            ts_col = guard[0] if guard else None
-            if pcols and set(pcols) <= set(keys) and not evolving:
-                merge_upsert_partitioned(
-                    catalog, table, source, keys, pcols,
-                    ts_col=ts_col, max_partitions=max_partitions,
-                )
-                return None
-            merged = merge_upsert(
-                catalog.read(table), source, keys, ts_col=ts_col,
-                evolve_schema=evolve,
-            )
-            catalog.overwrite_via_staging(
-                merged, table, partition_by=pcols
-            )
-            return None
-        from ..operators.merge_clauses import (
-            merge_apply,
-            merge_apply_partitioned,
-            nm_partition_violations,
-        )
-
-        if guard_expr is not None:
-            # the ON timestamp guard gates every MATCHED clause
-            # (fixed reference semantics: stale source rows keep the
-            # target row, they are NOT re-inserted)
-            for m in matched:
-                m.condition = (
-                    guard_expr
-                    if m.condition is None
-                    else f"({guard_expr}) AND ({m.condition})"
-                )
-        # general clause sets still get partition pruning when the
-        # layout allows it: partition cols are same-named merge keys,
-        # no DELETE (could empty a leaf), no BY SOURCE (touches every
-        # leaf), no SET on a partition column (rows must not move),
-        # and every NOT MATCHED insert places its row in the source
-        # row's own partition (INSERT * or VALUES assigning exactly
-        # __s_<pcol>) — anything else would land outside the probed
-        # leaf set and vanish in the swap, so it takes the
-        # whole-table staging rewrite instead
-        prunable = (
+        if (
             pcols
             and not evolving
-            and set(pcols)
-            <= {tc for tc, sc in pairs if tc == sc}
             and not by_source
-            and all(m.sets is not None for m in matched)
-            and not any(
-                set(m.sets or {}) & set(pcols) for m in matched
-            )
-            and not nm_partition_violations(not_matched, pcols)
-        )
-        if prunable:
+            and _prune_refusal(pcols, pairs, matched, not_matched) is None
+        ):
             hint = None
             spec = source_spec.strip()
             if not spec.startswith("("):
@@ -1810,19 +1786,17 @@ def run_table_sql(catalog, sql: str, max_partitions: int = 10_000):
                     hint = touched_partitions_from_layout(
                         catalog, src_name, pcols, max_partitions
                     )
-            merge_apply_partitioned(
-                catalog, table, source, pairs,
-                matched=matched, not_matched=not_matched,
-                max_partitions=max_partitions,
-                touched_hint=hint,
+            _merge_partitions(
+                catalog, table, source, pcols,
+                lambda target_slice: merge(
+                    target_slice, source, pairs, matched, not_matched
+                ),
+                max_partitions, touched_hint=hint,
             )
             return None
-        merged = merge_apply(
-            catalog.read(table), source, pairs,
-            matched=matched,
-            not_matched=not_matched,
-            not_matched_by_source=by_source,
-            evolve_schema=evolve,
+        merged = merge(
+            catalog.read(table), source, pairs, matched, not_matched,
+            by_source, evolve,
         )
         catalog.overwrite_via_staging(merged, table, partition_by=pcols)
         return None

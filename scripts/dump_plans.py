@@ -4,7 +4,13 @@ queries with the scale-relevant properties called out.
 The properties themselves are regression-tested in tests/test_plans.py;
 this artifact makes them reviewable without running Spark.
 
-Usage: python scripts/dump_plans.py [sf_dir]
+Usage:
+  python scripts/dump_plans.py [sf_dir]
+  python scripts/dump_plans.py sf_dir --pair DIR SUFFIX QUERY [QUERY ...]
+
+``--pair`` writes each named query's plan to ``DIR/<query>_<SUFFIX>.txt``
+instead of PLANS.md: run it with suffix ``before`` from a checkout of
+the parent commit and ``after`` from the change for a plan-diff pair.
 """
 
 from __future__ import annotations
@@ -425,8 +431,24 @@ SHOWCASE = [
 ]
 
 
+def _plan_text(df) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    # Plans can embed non-printable literal bytes (e.g. the \x1f
+    # separator / \x00NULL\x00 sentinel of merge.py's _composite_key)
+    # — escape them so the dumps stay text files.
+    return "".join(
+        ch if ch in "\n\t" or ord(ch) >= 32 else f"\\x{ord(ch):02x}"
+        for ch in buf.getvalue()
+    ).rstrip()
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    pair = sys.argv[3:] if sys.argv[2:3] == ["--pair"] else None
+    if len(sys.argv) > 2 and (pair is None or len(pair) < 3):
+        raise SystemExit(__doc__)
     import __spark_entry__ as mod
     from mydatalake_spark.session import get_spark
 
@@ -436,6 +458,16 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     qs = mod.queries()
 
+    if pair is not None:
+        outdir, suffix, *names = pair
+        os.makedirs(outdir, exist_ok=True)
+        for name in names:
+            path = os.path.join(outdir, f"{name}_{suffix}.txt")
+            with open(path, "w") as fh:
+                fh.write(_plan_text(qs[name](spark, sf_dir)) + "\n")
+            print(f"wrote {path}", flush=True)
+        return
+
     out = [
         "# PLANS — physical-plan evidence for the 100 TB design\n",
         "Generated by `python scripts/dump_plans.py` at sf_dir="
@@ -444,21 +476,8 @@ def main() -> None:
         "so regressions fail CI rather than silently de-optimizing.\n",
     ]
     for name, why in SHOWCASE:
-        df = qs[name](spark, sf_dir)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
-        # Plans can embed non-printable literal bytes (e.g. the
-        # \x1f separator / \x00NULL\x00 sentinel of merge.py's
-        # _composite_key) — escape them so PLANS.md stays a text file.
-        plan = "".join(
-            ch if ch in "\n\t" or ord(ch) >= 32 else f"\\x{ord(ch):02x}"
-            for ch in plan
-        )
-        # Keep the operator tree + the interesting node details, drop
-        # codegen ids noise-free enough to read.
-        out.append(f"\n## {name}\n\n{why}\n\n```\n{plan.rstrip()}\n```\n")
+        plan = _plan_text(qs[name](spark, sf_dir))
+        out.append(f"\n## {name}\n\n{why}\n\n```\n{plan}\n```\n")
 
     with open(
         os.path.join(os.path.dirname(os.path.dirname(

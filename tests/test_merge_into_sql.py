@@ -5,10 +5,11 @@ The reference's core write is a Delta MERGE (reference
 lib/ingestors.py:122-126); a migrating Databricks user carries
 ``MERGE INTO t USING s ON ... WHEN MATCHED THEN UPDATE SET * WHEN NOT
 MATCHED THEN INSERT *`` statements — the one Delta statement the SQL
-adapter did not dispatch before r11. The canonical upsert shape
-routes onto the proven merge_upsert/merge_upsert_partitioned (pruned
-when the hive layout's columns are merge keys); general clause sets
-run as ONE full-outer join in merge_apply."""
+adapter did not dispatch before r11. Every clause set runs as ONE
+full-outer join in the one merge engine (pruned when the hive layout's
+columns are merge keys); the canonical upsert shape dedups the source
+latest-wins, as merge_upsert does, where other clause sets refuse
+duplicate source keys."""
 
 import os
 
@@ -216,6 +217,60 @@ def test_merge_sql_duplicate_source_keys_refused(spark, tmp_path):
             f"MERGE INTO {TBL} t USING {SRC} s ON t.id = s.id "
             "WHEN MATCHED THEN DELETE",
         )
+
+
+def test_merge_sql_canonical_dedups_duplicate_source_keys(spark, tmp_path):
+    # the canonical upsert shape dedups the changeset latest-wins
+    # instead of refusing its duplicate keys (the reference's CDC
+    # upsert, merge_upsert's source rule)
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    _seed(spark, cat)
+    cat.overwrite(
+        spark.createDataFrame(
+            [(1, "EU", 1.0, 200), (1, "EU", 2.0, 300), (9, "EU", 9.0, 1)],
+            SCHEMA,
+        ),
+        SRC,
+    )
+    run_table_sql(
+        cat,
+        f"MERGE INTO {TBL} t USING {SRC} s ON t.id = s.id "
+        "AND s.ts >= t.ts "
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
+    )
+    got = {r.id: (r.amount, r.ts) for r in cat.read(TBL).collect()}
+    assert got == {
+        1: (2.0, 300), 2: (20.0, 100), 3: (30.0, 100), 4: (40.0, 100),
+        9: (9.0, 1),
+    }
+
+
+def test_merge_sql_ts_guard_null_is_minus_infinity(spark, tmp_path):
+    # one null rule for the ON guard whatever the clause set: a null
+    # target ts loses to any source ts (merge_upsert's null ≡ -inf),
+    # for `>=` and `>` alike
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    src = spark.createDataFrame([(1, 3, "new")], "k int, ts int, v string")
+    cat.overwrite(src, SRC)
+    head = f"MERGE INTO {TBL} t USING {SRC} s ON t.k = s.k AND "
+    for stmt in (
+        "s.ts >= t.ts WHEN MATCHED THEN UPDATE SET * "
+        "WHEN NOT MATCHED THEN INSERT *",
+        "s.ts >= t.ts WHEN MATCHED THEN UPDATE SET * "
+        "WHEN NOT MATCHED AND s.v IS NOT NULL THEN INSERT *",
+        "s.ts > t.ts WHEN MATCHED THEN UPDATE SET * "
+        "WHEN NOT MATCHED THEN INSERT *",
+    ):
+        cat.overwrite(
+            spark.createDataFrame(
+                [(1, None, "old")], "k int, ts int, v string"
+            ),
+            TBL,
+        )
+        run_table_sql(cat, head + stmt)
+        assert [tuple(r) for r in cat.read(TBL).collect()] == [
+            (1, 3, "new")
+        ], stmt
 
 
 def test_merge_apply_python_surface(spark):

@@ -377,6 +377,34 @@ def test_merge_synthesized_tiebreaker_distinguishes_null_shifts(spark):
     assert len(survivors) == 1, survivors
 
 
+def test_merge_upsert_builds_with_no_job(spark):
+    """merge_upsert's deduped source has unique keys, so building the
+    merge plan runs no Spark job (no duplicate-key probe)."""
+    from mydatalake_spark.operators.merge import merge_upsert
+
+    target = spark.createDataFrame(
+        [(1, "a", 1), (2, "b", 1)], "id int, v string, ts int"
+    )
+    source = spark.createDataFrame(
+        [(1, "x", 2), (1, "y", 3), (3, "z", 1)], "id int, v string, ts int"
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("merge-upsert-build", "merge-upsert-build")
+    try:
+        for ts_col in ("ts", None):
+            for delete_missing in (False, True):
+                merge_upsert(
+                    target, source, ["id"], ts_col,
+                    delete_missing=delete_missing,
+                )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup("merge-upsert-build")
+    assert list(jobs) == []
+
+
 def test_merge_upsert_guards_reserved_staging_names(spark):
     """A real column named like merge_upsert's staging columns
     (presence markers, synthesized tiebreaker, the '__s_' rename

@@ -153,32 +153,36 @@ def test_merge_sql_skips_partition_probe_with_layout_hint(
         (F.col("id") % 4).cast("int").alias("bucket"),
         F.lit(1.0).alias("v"),
     )
-    cat.overwrite(tgt, "silver.s.t", partition_by=["bucket"])
     chg = spark.range(10).select(
         (F.col("id") * 4).alias("k"),   # bucket 0 only
         F.lit(0).cast("int").alias("bucket"),
         F.lit(9.0).alias("v"),
     )
     cat.overwrite(chg, "bronze.s.chg", partition_by=["bucket"])
-    stmt_tbl = (
-        "MERGE INTO silver.s.t t USING bronze.s.chg s "
-        "ON t.k = s.k AND t.bucket = s.bucket "
-        "WHEN MATCHED THEN UPDATE SET v = s.v "
-        "WHEN NOT MATCHED AND s.v > 100 THEN INSERT (k, bucket, v) "
-        "VALUES (s.k, s.bucket, s.v)"
-    )
-
     real_distinct = DataFrame.distinct
 
     def poisoned(self):
         raise AssertionError("distinct-partitions probe job ran")
 
-    monkeypatch.setattr(DataFrame, "distinct", poisoned)
-    run_table_sql(cat, stmt_tbl)  # hint path: must not call distinct
-    monkeypatch.setattr(DataFrame, "distinct", real_distinct)
-    got = {r.k: r.v for r in cat.read("silver.s.t").collect()}
-    assert got[0] == 9.0 and got[4] == 9.0 and got[1] == 1.0
-    assert len(got) == 40
+    for clauses in (
+        "WHEN MATCHED THEN UPDATE SET v = s.v "
+        "WHEN NOT MATCHED AND s.v > 100 THEN INSERT (k, bucket, v) "
+        "VALUES (s.k, s.bucket, s.v)",
+        # the canonical upsert shape takes the same driver and hint
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
+    ):
+        cat.overwrite(tgt, "silver.s.t", partition_by=["bucket"])
+        monkeypatch.setattr(DataFrame, "distinct", poisoned)
+        # hint path: must not call distinct
+        run_table_sql(
+            cat,
+            "MERGE INTO silver.s.t t USING bronze.s.chg s "
+            "ON t.k = s.k AND t.bucket = s.bucket " + clauses,
+        )
+        monkeypatch.setattr(DataFrame, "distinct", real_distinct)
+        got = {r.k: r.v for r in cat.read("silver.s.t").collect()}
+        assert got[0] == 9.0 and got[4] == 9.0 and got[1] == 1.0
+        assert len(got) == 40
     # the subquery spelling has no layout to read -> probe runs
     monkeypatch.setattr(DataFrame, "distinct", poisoned)
     with pytest.raises(AssertionError, match="probe job ran"):

@@ -28,7 +28,11 @@ from .catalog import Catalog
 from .plans.qualify import run_sql
 from .schema import TableMeta, load_table_meta
 from .sources.readers import read_source
-from .operators.merge import merge_upsert, merge_upsert_bloomed
+from .operators.merge import (
+    _dedup_source,
+    merge_upsert,
+    merge_upsert_bloomed,
+)
 
 
 @dataclass
@@ -275,9 +279,11 @@ class IngestorCDC(Ingestor):
             )
             return
         if not self.catalog.exists(self.meta.full_name):
-            # First write: plain overwrite (reference guards similarly
-            # at lib/checker_handler.py:173 for the history table).
-            self.save(df)
+            # First write: overwrite with the changeset deduped
+            # latest-wins, as every later merge dedups it (reference
+            # guards similarly at lib/checker_handler.py:173 for the
+            # history table).
+            self.save(_dedup_source(df, keys, ts, None))
             return
         target = self.catalog.read(self.meta.full_name)
         merge_fn = (

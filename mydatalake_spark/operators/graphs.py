@@ -6,8 +6,8 @@ operators/clusters.py). Pipelines use PageRank-style scores to weight
 web documents by link authority before sampling a pre-training mix
 (the Common Crawl curation recipe).
 
-Spark-first shape (Pregel-by-DataFrames, same discipline as
-clusters.py:connected_components):
+Spark-first shape (Pregel-by-DataFrames, same discipline as the
+fixpoint path of clusters.py:connected_components):
 
 - edges ⋈ out-degree is computed once, persisted, and reused by every
   iteration — the only per-iteration work is one equi-join

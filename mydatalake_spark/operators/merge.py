@@ -22,13 +22,16 @@ guard>`` + ``INSERT *`` (+ BY SOURCE DELETE for full sync) over the
 latest-wins deduped source, as one full-outer join. The dedup makes
 the source keys unique, so unlike ``merge_apply`` it never runs the
 duplicate-key probe: building the plan runs no Spark job. Scale
-notes (100 TB): the join shuffles both sides by key — exactly what
-Delta MERGE does internally (its find-touched-files join). With AQE
-on, a small changeset side is broadcast automatically, which is the
-common CDC case (daily delta ≪ accumulated table). For partitioned
-tables, ``merge_upsert_partitioned`` runs the same merge through the
-shared partition-scoped driver, so unchanged partitions are never
-rewritten.
+notes (100 TB): the join shuffles both sides by key, however small
+the changeset: Spark has no broadcast FULL OUTER join, so neither the
+planner nor AQE broadcasts either side, and the plan is a
+``SortMergeJoin FullOuter`` with an Exchange under each side (PLANS.md
+``merge_cdc_orders``). Every target row is shuffle-written on every
+batch. Two merges avoid that: ``merge_upsert_bloomed`` routes target
+rows that provably miss the changeset around the join, and, for
+partitioned tables, ``merge_upsert_partitioned`` runs the same merge
+through the shared partition-scoped driver, so unchanged partitions
+are never read or rewritten.
 """
 
 from __future__ import annotations
@@ -421,7 +424,8 @@ def merge_upsert_partitioned(
     fast too, since ``IN``/``=`` never match them), reads ONLY those
     partitions of the target, merges that slice, and rewrites only
     those leaf directories. A table that does not exist yet is created
-    from the source.
+    from the source, deduped latest-wins on the keys like every later
+    batch.
 
     Returns the list of touched partition values (tuples when
     ``partition_col`` is a list).
@@ -450,6 +454,6 @@ def merge_upsert_partitioned(
 
     touched = _merge_partitions(
         catalog, table, source, pcols, merge_slice, max_partitions,
-        bootstrap=True,
+        bootstrap=_dedup_source(source, keys, ts_col, tiebreakers),
     )
     return [t[0] for t in touched] if len(pcols) == 1 else touched

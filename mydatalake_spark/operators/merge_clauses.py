@@ -487,7 +487,7 @@ def _merge_partitions(
     merge_slice,
     max_partitions: int,
     touched_hint: list | None = None,
-    bootstrap: bool = False,
+    bootstrap: DataFrame | None = None,
 ) -> list[tuple]:
     """The partition-scoped merge driver under both
     ``merge_upsert_partitioned`` and :func:`merge_apply_partitioned`:
@@ -505,8 +505,9 @@ def _merge_partitions(
        retains the pre-state as a hardlink snapshot; then the caches
        the merge adopted onto its frame are released.
 
-    With ``bootstrap`` a missing table is created from the source (the
-    CDC upsert's first write). Returns the touched tuples."""
+    With ``bootstrap`` a missing table is created from that frame (the
+    CDC upsert's first write, from its deduped changeset). Returns the
+    touched tuples."""
     from .. import caching
     from ..catalog import (
         _check_no_null_partition_values,
@@ -533,8 +534,8 @@ def _merge_partitions(
     _check_no_null_partition_values(pcols, touched)
     if not touched:
         return []
-    if bootstrap and not catalog.exists(table):
-        catalog.overwrite(source, table, partition_by=pcols)
+    if bootstrap is not None and not catalog.exists(table):
+        catalog.overwrite(bootstrap, table, partition_by=pcols)
         return touched
     merged = merge_slice(
         catalog.read(table).filter(partition_predicate(pcols, touched))

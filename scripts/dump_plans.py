@@ -101,9 +101,16 @@ SHOWCASE = [
     ),
     (
         "similarity_topk",
-        "Brute-force cosine top-k: per-partition group limit before the\n"
-        "shuffle (rank window), so k rows per query survive per partition —\n"
-        "the shuffle is O(queries x k), independent of corpus size.",
+        "Brute-force cosine top-5 and the LSH (random-hyperplane) top-5,\n"
+        "full-outer joined on (query, neighbor) in one frame\n"
+        "(SortMergeJoin FullOuter), so any disagreement changes the output.\n"
+        "Each branch limits per query before its shuffle (WindowGroupLimit\n"
+        "Partial → Exchange → Final), so k rows per query per partition\n"
+        "cross the exchange: O(queries x k), independent of corpus size.\n"
+        "The LSH branch finds candidates with an equi-join on (band, bucket)\n"
+        "against the broadcast query buckets, dedups the pairs, and reranks\n"
+        "them exactly after two more broadcast joins that bring in the\n"
+        "candidate and query vectors.",
     ),
     (
         "q6_forecast_revenue",

@@ -564,6 +564,34 @@ def test_cdc_partitioned_bloom_strategy_from_metadata(spark, tmp_path):
     assert digest(d1) == before          # untouched partition untouched
 
 
+@pytest.mark.parametrize("strategy", ["join", "partitioned"])
+def test_cdc_first_write_dedups_latest_wins(spark, tmp_path, strategy):
+    """A CDC table's first write is deduped latest-wins on the keys like
+    every later merge, so a key duplicated in the first changeset is
+    stored once (and re-merging the same changeset keeps it once)."""
+    from mydatalake_spark.ingest import IngestorCDC
+
+    meta = tmp_path / "meta" / "ticks"
+    os.makedirs(meta)
+    (meta / "ticks.yml").write_text(PARTED_CDC_YML)
+    raw = tmp_path / "raw"
+    os.makedirs(raw)
+    with open(raw / "b1.json", "w") as fh:
+        for ts, px in [(1, 1.0), (2, 2.0)]:
+            fh.write(json.dumps({"symbol": "A", "trade_date": "d1",
+                                 "ts": ts, "px": px}) + "\n")
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    for _ in range(2):
+        IngestorCDC(
+            spark=spark, catalog=cat, metadata_root=str(tmp_path / "meta"),
+            table="ticks", input_format="json", input_path=str(raw),
+            merge_strategy=strategy,
+        ).run()
+        got = [(r.symbol, r.trade_date, r.ts, r.px)
+               for r in cat.read("bronze.brapi.ticks").collect()]
+        assert got == [("A", "d1", 2, 2.0)]
+
+
 def test_cdc_partitioned_strategy_validation(spark, tmp_path):
     """partitioned strategies fail fast at construction when the table
     declares no (or multi) partition_by, or the partition column is
